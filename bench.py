@@ -24,8 +24,8 @@ ride in the output JSON.
 Env:
   SPARK_GRAFT_SF_DIR      input dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS        local[N] cores (default 32)
-  SPARK_GRAFT_REPEATS     timed runs per query job, best-of (default 3)
-  SPARK_GRAFT_BUILD_REPEATS  full index builds, best-of (default 2)
+  SPARK_GRAFT_REPEATS     timed runs per query job, best-of (default 5)
+  SPARK_GRAFT_BUILD_REPEATS  full index builds, best-of (default 3)
   SPARK_GRAFT_SYNTH_DOCS  ALSO build a deterministic synthetic corpus
                           of this many docs (corpus.synth_pages) and
                           report build + kernel numbers under "synth".
@@ -60,10 +60,13 @@ def kernel_latencies(index, parsed, algos, k: int = 10) -> dict:
     """Per-query kernel latency stats (µs): pull the workload's
     segment rows once (query-term lists only — workload-sized, the
     in-memory form the reference benchmarks), then per query run each
-    kernel with 1 warmup + 3 timed runs and keep the min."""
+    kernel with 1 warmup + 3 timed runs and keep the min. The term
+    lists carry no block cache, so every timed run decodes its blocks
+    exactly as the warmup did."""
     from pisa_spark.codecs import CODECS
     from pisa_spark.query.executor import (
-        RANKED_KERNELS, _group_to_terms, _query_segments,
+        RANKED_KERNELS, _build_batch_protos, _factored_segment_rows,
+        _walk_batch_queries,
     )
     from pisa_spark.query.kernels import Stats
 
@@ -75,20 +78,25 @@ def kernel_latencies(index, parsed, algos, k: int = 10) -> dict:
         b=index.config.bm25.b,
         quantized=bool(index.config.index.quantize_bits),
     )
-    pdf = _query_segments(index, parsed).toPandas()
+    pdf = _factored_segment_rows(index, parsed, parsed, None).toPandas()
     lat: dict[str, list[float]] = {a: [] for a in algos}
     for _, g in pdf.groupby("query_id"):
-        terms = _group_to_terms(g, decode)
-        kk = int(g["k"].iloc[0])
+        protos, base_bm = _build_batch_protos(g, decode, cache=False)
+        right = g.drop_duplicates("term_id")
         for algo in algos:
-            kernel = RANKED_KERNELS[algo]
-            kernel(terms, kk, stats)  # warmup
-            best = float("inf")
-            for _ in range(3):
-                t = time.perf_counter()
-                kernel(terms, kk, stats)
-                best = min(best, time.perf_counter() - t)
-            lat[algo].append(best * 1e6)
+
+            def best_of_3(terms, kk, stats, init_threshold, algo=algo):
+                kernel = RANKED_KERNELS[algo]
+                kernel(terms, kk, stats)  # warmup
+                best = float("inf")
+                for _ in range(3):
+                    t = time.perf_counter()
+                    res = kernel(terms, kk, stats)
+                    best = min(best, time.perf_counter() - t)
+                lat[algo].append(best * 1e6)
+                return res
+
+            list(_walk_batch_queries(right, protos, base_bm, best_of_3, stats))
     out = {}
     for algo, xs in lat.items():
         arr = np.asarray(xs)
@@ -264,7 +272,7 @@ def main() -> None:
     import pandas as pd
 
     from pisa_spark.corpus import synth_queries
-    from pisa_spark.query.executor import topk_range, topk_search
+    from pisa_spark.query.executor import topk_search_batch
     from pisa_spark.query.parser import parse_queries
 
     # Query terms drawn from the documents vocabulary (Zipf-free small
@@ -286,23 +294,17 @@ def main() -> None:
     parsed = parse_queries(qdf, index.lexicon, pre_tokenized=True).persist()
     parsed.count()
 
-    # Headline kernel jobs run BATCH-MAJOR by default (VERDICT r3
-    # next-#6: batch_major_qps measured 3.3x query-major on the same
-    # workload; the strategy_topk gate entry pins rank-identity
-    # between the two forms every driver round). Set
-    # SPARK_GRAFT_BENCH_STRATEGY=query to time the per-query shape —
-    # the throughput section below always reports BOTH.
-    strategy = os.environ.get("SPARK_GRAFT_BENCH_STRATEGY", "batch")
-
-    from pisa_spark.query.executor import topk_search_batch
-
-    def headline_search(algo, thresholds=None):
-        if strategy == "batch":
-            return topk_search_batch(
-                index, parsed, algorithm=algo, k=10, thresholds=thresholds
-            )
-        return topk_search(
-            index, parsed, algorithm=algo, k=10, thresholds=thresholds
+    # Headline kernel jobs run BATCH-MAJOR (VERDICT r3 next-#6:
+    # batch_major_qps measured 3.3x query-major on the same workload;
+    # the strategy_topk gate entry pins rank-identity between the two
+    # forms on every gate run). The throughput section below times
+    # BOTH groupings. Range execution runs batch-major too: payloads
+    # ship once per (batch, bucket), pinned rank-identical by the
+    # range_topk gate entry's batch tags.
+    def headline_search(algo, thresholds=None, ranges=False):
+        return topk_search_batch(
+            index, parsed, algorithm=algo, k=10, thresholds=thresholds,
+            ranges=ranges,
         )
 
     for algo, key in (
@@ -313,21 +315,9 @@ def main() -> None:
         ("ranked_or", "taat_100q"),
     ):
         timed(key, lambda a=algo: headline_search(a).count())
-    # Range execution follows the same strategy switch (r4 VERDICT #1:
-    # the query-major form was the round's only regression — payloads
-    # shipped once per (query, bucket); topk_range_batch ships them
-    # once per (batch, bucket), pinned rank-identical by the
-    # range_topk gate entry's batch tags).
-    from pisa_spark.query.executor import topk_range_batch
-
-    def headline_range(algo):
-        if strategy == "batch":
-            return topk_range_batch(index, parsed, algorithm=algo, k=10)
-        return topk_range(index, parsed, algorithm=algo, k=10)
-
     timed(
         "range_maxscore_100q",
-        lambda: headline_range("maxscore").count(),
+        lambda: headline_search("maxscore", ranges=True).count(),
     )
 
     # Threshold-bootstrapped BMW (kth_threshold pipeline end-to-end).
@@ -356,7 +346,7 @@ def main() -> None:
     # decode across each batch — BENCH.md "Batch-major execution").
     # Reported SEPARATELY from `queries` so the summed e2e headline
     # stays comparable round-over-round.
-    from pisa_spark.query.executor import topk_search_batch
+    from pisa_spark.query.executor import topk_search
 
     brows = []
     for qi in range(3200):

@@ -75,6 +75,10 @@ def _grouped_ranks(d: DataFrame, group_cols: list[str],
         .localCheckpoint(eager=True)
     )
     cnt = ranged.groupBy("__pid", *group_cols).agg(F.count("*").alias("__n"))
+    # Without group_cols this offsets window has no partition (Spark
+    # warns "WindowExec: No Partition Defined"). That is benign: it
+    # runs over the combine-shrunk counts, at most one row per Spark
+    # partition, never over the corpus.
     wo = (
         Window.partitionBy(*group_cols).orderBy("__pid")
         .rowsBetween(Window.unboundedPreceding, -1)

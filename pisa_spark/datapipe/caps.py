@@ -23,6 +23,15 @@ the same two steps, owned here so the three cap sites can't drift:
    still pick broadcast on small inputs and can SPLIT a skewed
    stream-side partition against the <=1-row-per-key build side.
 
+``apply_cap`` runs both steps; the three cap sites call only it. A
+caller that also runs the audit passes the audit frame back as
+``over`` so the over-cap aggregation runs once; ``apply_cap``
+re-filters that frame on its size column against the call's own cap,
+so a frame built at a SMALLER cap gives exactly the rows of the call
+without it. A re-filter cannot repair the other direction: a frame
+built at a LARGER cap lacks the groups between the two caps, and
+those groups then stay in.
+
 Plan shapes pinned by tests/test_plan_shape.py
 (test_simhash_cap_is_broadcast_antijoin,
 test_embedding_cell_cap_is_broadcast_antijoin,
@@ -54,3 +63,17 @@ def drop_overcap(df: DataFrame, keys: list[str], over: DataFrame,
     if hint_broadcast:
         over = F.broadcast(over)
     return df.join(over, list(keys), "left_anti")
+
+
+def apply_cap(df: DataFrame, keys: list[str], cap: int,
+              hint_broadcast: bool, over: DataFrame | None = None,
+              size_col: str = "bucket_size") -> DataFrame:
+    """``df`` minus members of key groups with more than ``cap`` rows.
+    ``over``: an optional pre-built overcap_keys frame (the audit),
+    re-filtered on ``size_col`` > ``cap`` — see the module docstring
+    for the one direction that cannot repair."""
+    if over is None:
+        over = overcap_keys(df, keys, cap, size_col)
+    else:
+        over = over.filter(F.col(size_col) > cap)
+    return drop_overcap(df, keys, over, hint_broadcast)

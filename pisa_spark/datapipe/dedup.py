@@ -441,12 +441,10 @@ def _cap_bands(bands: DataFrame, max_bucket: int,
     rationale). ``over``: pass a minhash_dropped_buckets frame to
     share ONE over-cap aggregation between the cap and the audit.
     Plan pinned by test_minhash_cap_is_antijoin_not_window."""
-    from pisa_spark.datapipe.caps import drop_overcap, overcap_keys
+    from pisa_spark.datapipe.caps import apply_cap
 
-    if over is None:
-        over = overcap_keys(bands, ["band_id", "band_key"], max_bucket)
-    return drop_overcap(bands, ["band_id", "band_key"], over,
-                        hint_broadcast=False)
+    return apply_cap(bands, ["band_id", "band_key"], max_bucket,
+                     hint_broadcast=False, over=over)
 
 
 def minhash_lsh_pairs(docs: DataFrame, k: int = 3, num_perm: int = NUM_PERM,
@@ -463,7 +461,8 @@ def minhash_lsh_pairs(docs: DataFrame, k: int = 3, num_perm: int = NUM_PERM,
     that also run the audit share one scan (minhash_bands);
     ``dropped`` optionally supplies a pre-materialized
     minhash_dropped_buckets frame so the over-cap aggregation runs
-    ONCE for the cap and the audit."""
+    ONCE for the cap and the audit; it is re-filtered at
+    ``max_bucket`` (caps.apply_cap)."""
     # Shingles feed BOTH the signature aggregation and the exact
     # verification joins: materialize the tokenize+explode scan once
     # (eager localCheckpoint — executor-local, released when
@@ -665,9 +664,10 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = MAX_HAMMING,
     under-cap bucket. ``chunks``: pass ``simhash_chunks(docs)`` to
     share the fingerprint scan with the audit; ``dropped``: pass a
     pre-materialized ``simhash_dropped_chunks`` frame so the over-cap
-    aggregation runs ONCE for the cap and the audit.
+    aggregation runs ONCE for the cap and the audit; it is re-filtered
+    at ``max_bucket`` (caps.apply_cap).
     """
-    from pisa_spark.datapipe.caps import drop_overcap, overcap_keys
+    from pisa_spark.datapipe.caps import apply_cap
 
     assert max_hamming < SIM_CHUNKS
     if chunks is None:
@@ -680,9 +680,8 @@ def simhash_pairs(docs: DataFrame, max_hamming: int = MAX_HAMMING,
     # values), so the over-cap set qualifies for a known-small
     # broadcast hint and the cap filter stays map-side on both join
     # sides.
-    if dropped is None:
-        dropped = overcap_keys(chunks, ["ci", "ch"], max_bucket)
-    ex = drop_overcap(chunks, ["ci", "ch"], dropped, hint_broadcast=True)
+    ex = apply_cap(chunks, ["ci", "ch"], max_bucket, hint_broadcast=True,
+                   over=dropped)
     x = ex.select(
         F.col("doc_id").alias("doc_a"), F.col("fp").alias("fa"), "ci", "ch"
     )

@@ -174,12 +174,12 @@ def embedding_dup_pairs(emb: DataFrame, tau_micro: int = COS_TAU_MICRO,
     # ``n_centroids``, so the over-cap set is provably known-small
     # and the cap filter stays map-side. ``dropped``: pass a
     # pre-materialized embedding_dropped_cells frame so the over-cap
-    # aggregation runs ONCE for the cap and the audit.
-    from pisa_spark.datapipe.caps import drop_overcap, overcap_keys
+    # aggregation runs ONCE for the cap and the audit (re-filtered at
+    # ``max_cell``).
+    from pisa_spark.datapipe.caps import apply_cap
 
-    if dropped is None:
-        dropped = overcap_keys(assign, ["cell"], max_cell)
-    capped = drop_overcap(assign, ["cell"], dropped, hint_broadcast=True)
+    capped = apply_cap(assign, ["cell"], max_cell, hint_broadcast=True,
+                       over=dropped, size_col="cell_size")
     x = capped.select(F.col("vec_id").alias("vec_a"), "cell")
     y = capped.select(F.col("vec_id").alias("vec_b"), "cell")
     cand = (

@@ -127,16 +127,16 @@ def _queries_df(spark: SparkSession) -> DataFrame:
 
 def _run_kernel(algorithm: str, range_mode: bool = False, variant: str = "default"):
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_range, topk_search
+        from pisa_spark.query.executor import topk_search
         from pisa_spark.query.parser import parse_queries
 
         index = _get_index(spark, sf_dir, variant)
         parsed = parse_queries(
             _queries_df(spark), index.lexicon, pre_tokenized=True
         )
-        if range_mode:
-            return topk_range(index, parsed, algorithm=algorithm, k=K)
-        return topk_search(index, parsed, algorithm=algorithm, k=K)
+        return topk_search(
+            index, parsed, algorithm=algorithm, k=K, ranges=range_mode
+        )
 
     fn.__name__ = f"gated_{'range_' if range_mode else ''}{variant}_{algorithm}"
     return fn
@@ -222,13 +222,14 @@ def _run_sampling_safe(algorithm: str):
 
 
 def _run_range_live(algorithm: str):
-    """Range execution with the live-range pre-filter
-    (wand_data_range.hpp compute_live_blocks): bootstrap thresholds
-    prune dead (query, docID-range) groups in Catalyst before any
-    kernel task runs. Must stay rank-identical to ranked_or."""
+    """Range execution (executor.topk_search, ranges=True) with the
+    live-range pre-filter (wand_data_range.hpp compute_live_blocks):
+    bootstrap thresholds prune dead (query, docID-range) groups in
+    Catalyst before any kernel task runs. Must stay rank-identical to
+    ranked_or."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_range
+        from pisa_spark.query.executor import topk_search
         from pisa_spark.query.parser import parse_queries
         from pisa_spark.query.thresholds import (
             estimate_thresholds_with_pairs, kth_score_cache,
@@ -240,7 +241,10 @@ def _run_range_live(algorithm: str):
         )
         cache = kth_score_cache(index, k=K)
         est = estimate_thresholds_with_pairs(index, parsed, cache, k=K)
-        return topk_range(index, parsed, algorithm=algorithm, k=K, thresholds=est)
+        return topk_search(
+            index, parsed, algorithm=algorithm, k=K, thresholds=est,
+            ranges=True,
+        )
 
     fn.__name__ = f"gated_range_live_{algorithm}"
     return fn
@@ -451,14 +455,15 @@ def _bmw_variants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _range_batch(algorithm: str, live: bool = False):
-    """Batch-major range execution (executor.topk_range_batch): term
-    payloads cross the wire once per (batch, bucket) instead of once
-    per (query, bucket); with ``live``, additionally bootstrapped by
-    pair-estimate thresholds through the Catalyst live-range
-    pre-filter. Must stay rank-identical to ranked_or."""
+    """Batch-major range execution (executor.topk_search_batch,
+    ranges=True): term payloads cross the wire once per (batch,
+    bucket) instead of once per (query, bucket); with ``live``,
+    additionally bootstrapped by pair-estimate thresholds through the
+    Catalyst live-range pre-filter. Must stay rank-identical to
+    ranked_or."""
 
     def fn(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pisa_spark.query.executor import topk_range_batch
+        from pisa_spark.query.executor import topk_search_batch
         from pisa_spark.query.parser import parse_queries
 
         index = _get_index(spark, sf_dir)
@@ -473,9 +478,9 @@ def _range_batch(algorithm: str, live: bool = False):
 
             cache = kth_score_cache(index, k=K)
             est = estimate_thresholds_with_pairs(index, parsed, cache, k=K)
-        return topk_range_batch(
+        return topk_search_batch(
             index, parsed, algorithm=algorithm, k=K, thresholds=est,
-            batches=5,
+            batches=5, ranges=True,
         )
 
     fn.__name__ = f"gated_range_batch{'_live' if live else ''}_{algorithm}"

@@ -1,41 +1,52 @@
 """Distributed query execution: fan kernels out with applyInPandas.
 
-Two physical strategies, mirroring the reference's two processing
-modes:
+Every ranked top-k call runs through ONE executor (``_topk``): one
+prologue (Stats, threshold guard, k default), one kernel-task body
+(``_run_group``: term prototypes built once per group by
+``_build_batch_protos``, walked per query by ``_walk_batch_queries``)
+and one output assembly. The two public entry points differ only in
+how they group work:
 
 - ``topk_search`` (query-major, mirrors tools/queries.cpp:175-288):
-  each query is one task; its terms' segments are shuffled/broadcast
-  to it and a numpy kernel runs the whole query. Right when posting
-  lists fit a task (the query side broadcasts, so Catalyst plans a
-  broadcast-hash join against the big segment table — segments never
-  move).
-- ``topk_range`` (doc-range-major, mirrors range_query.hpp:8-37):
-  kernels run per (query, docID-bucket) partition producing partial
-  top-k, then a window merges heaps. This is the 10^12-doc path: no
-  task ever sees a full head-term posting list.
+  one group per query; its terms' segment rows reach it through a
+  broadcast-hash join against the big segment table (the query side
+  broadcasts — segments never move). The low-latency shape.
+- ``topk_search_batch`` (batch-major): queries hash into ``batches``
+  groups cogrouped with each batch's DISTINCT term lists, so a list
+  shared by many queries ships and decodes once per batch. The
+  throughput shape.
 
-Neither strategy touches any global per-document structure: doc
-lengths are encoded inside each segment block (segments.py
-``len_bytes``), so there is no driver-side collect and no broadcast
-of anything proportional to the corpus — the reference's design of
-keeping lengths with the wand data (wand_data.hpp:38-117), in Spark
-form.
+``ranges=True`` on either wraps the same body in doc-range execution
+(range_query.hpp:8-37 — a wrapper around any algorithm, not a second
+engine): groups split further by docID bucket, kernels produce partial
+top-k per bucket, and one window merges the heaps. This is the
+10^12-doc path: no task ever sees a full head-term posting list.
+
+No shape touches any global per-document structure: doc lengths are
+encoded inside each segment block (segments.py ``len_bytes``), so
+there is no driver-side collect and no broadcast of anything
+proportional to the corpus — the reference's design of keeping
+lengths with the wand data (wand_data.hpp:38-117), in Spark form.
 """
 
 from __future__ import annotations
+
+import math
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, Window
 
+from pisa_spark.build.segments import blocks_per_bucket
 from pisa_spark.codecs import CODECS
-from pisa_spark.config import EngineConfig
 from pisa_spark.functions.scoring import MICRO
 from pisa_spark.index import InvertedIndex
 from pisa_spark.query.kernels import (
     CappedBlockCache,
     adaptive_kernel,
     PRUNE_EPS,
+    Profiler,
     Stats,
     TermPostings,
     and_kernel,
@@ -69,7 +80,7 @@ BOOLEAN_KERNELS = {"and": and_kernel, "or": or_kernel}
 # score. Conjunctive algorithms (ranked_and / block_max_ranked_and)
 # restrict candidates to the intersection, whose k-th score can be
 # LOWER than one term's k-th score — bootstrapping them with the same
-# cache silently drops valid results, so topk_search rejects it.
+# cache silently drops valid results, so _topk rejects it.
 DISJUNCTIVE_ALGORITHMS = frozenset(
     {"ranked_or", "wand", "block_max_wand", "block_max_maxscore",
      "maxscore", "adaptive"}  # adaptive dispatches to disjunctive only
@@ -146,74 +157,30 @@ def _pruned_segments(
     return index.segments.filter(F.col("term_id").isin(ids))
 
 
-def _group_to_terms(pdf: pd.DataFrame, decode) -> list[TermPostings]:
-    terms = []
-    compressed = "max_score_q" in pdf.columns
-    for term_id, g in pdf.groupby("term_id", sort=True):
-        g = g.sort_values("block_id")
-        weight = float(g["weight"].iloc[0])
-        tmax = float(g["term_max_score"].iloc[0])
-        if compressed:
-            # wand_data_compressed recovery: u8 relative to term max
-            # (quantization rounded up at build -> still one-sided)
-            block_max = g["max_score_q"].to_numpy(np.float64) / 255.0 * tmax
-        else:
-            block_max = g["max_score"].to_numpy(np.float64)
-        # Upper bounds scaled to MICRO units (+1 covers the <=0.5-micro
-        # quantization shift) so they stay sound vs micro-int scores.
-        from pisa_spark.functions.scoring import MICRO
-
-        terms.append(
-            TermPostings(
-                term_id=int(term_id),
-                df=float(g["df"].iloc[0]),
-                weight=weight,
-                max_score=weight * tmax * MICRO + 1.0,
-                block_max_doc=g["max_doc_id"].to_numpy(np.uint64),
-                block_max_score=weight * block_max * MICRO + 1.0,
-                block_count=g["count"].to_numpy(np.int64),
-                doc_payloads=[bytes(x) for x in g["doc_bytes"]],
-                tf_payloads=[bytes(x) for x in g["tf_bytes"]],
-                len_payloads=[bytes(x) for x in g["len_bytes"]],
-                decode=decode,
-            )
-        )
-    return terms
-
-
-def _query_segments(
-    index: InvertedIndex, parsed: DataFrame, scan_prune: bool | None = None
-) -> DataFrame:
-    """parsed(query_id, k, term_id, weight) ⨝ term_meta ⨝ segments.
-
-    The parsed-query side is tiny -> broadcast, so the segment table
-    (the 100TB side) is scanned once with a broadcast-hash join and
-    never shuffled — and for file-backed indexes the scan itself is
-    row-group-pruned by the workload's term_ids (_pruned_segments).
-
-    Incrementally-built indexes carry a per-term ``bound_factor`` in
-    term_meta (streaming/incremental.py): the sound upper-bound
-    inflation for terms whose stored blocks were encoded under older
-    global stats. It is applied HERE — to the term max and the block
-    maxes — so stored segments stay immutable while every kernel's
-    pruning bounds stay one-sided. Batch indexes have no such column
-    (factor 1 by construction)."""
-    return _factored_segment_rows(index, parsed, parsed, scan_prune)
-
-
 def _factored_segment_rows(
     index: InvertedIndex,
     parsed: DataFrame,
     query_side: DataFrame,
     scan_prune: bool | None,
 ) -> DataFrame:
-    """The ONE place the bound-factor contract is applied (query-major
-    and batch-major execution both come through here, so they can
-    never diverge on pruning bounds): term_meta columns joined to the
-    broadcast-sized ``query_side`` (parsed queries, or a batch term
-    set), joined into the workload-pruned segment scan (driven by
-    ``parsed``), with ``bound_factor`` multiplied into the term max
-    and block maxes."""
+    """parsed-side ⨝ term_meta ⨝ segments: the segment rows every
+    kernel group reads. term_meta columns join the broadcast-sized
+    ``query_side`` (parsed queries, or a batch term set), and the
+    result is broadcast into the workload-pruned segment scan (driven
+    by ``parsed``), so the segment table (the 100TB side) is scanned
+    once and never shuffled — and for file-backed indexes the scan
+    itself is row-group-pruned by the workload's term_ids
+    (_pruned_segments).
+
+    The ONE place the bound-factor contract is applied, so every
+    execution shape gets the same pruning bounds. Incrementally-built
+    indexes carry a per-term ``bound_factor`` in term_meta
+    (streaming/incremental.py): the sound upper-bound inflation for
+    terms whose stored blocks were encoded under older global stats.
+    It multiplies into the term max and the block maxes HERE, so
+    stored segments stay immutable while every kernel's pruning
+    bounds stay one-sided. Batch indexes have no such column (factor
+    1 by construction)."""
     # Broadcast the query-sized side into the vocabulary-sized
     # term_meta (never the reverse), then the result into the
     # segment scan.
@@ -240,6 +207,371 @@ def _factored_segment_rows(
     return rows
 
 
+def _bound(weight, max_micro):
+    """THE pruning upper bound of a weighted term or block max given in
+    MICRO units: +1 covers the <=0.5-micro quantization shift, so it
+    stays sound against micro-int scores. Plain arithmetic, so the
+    kernels' numpy bounds and live_ranges' Catalyst bound share it."""
+    return weight * max_micro + 1.0
+
+
+# Working-set cap for the batch-major decoded-block cache: beyond
+# this many cached postings per term the cache stops growing (blocks
+# decode again per query, exactly as query-major execution). Bounds
+# task memory at ~24 bytes/posting regardless of batch composition.
+BATCH_CACHE_MAX_POSTINGS = 1 << 22
+
+# Row cap under which ranged batch-major execution's (batch x bucket)
+# query-replication table keeps its broadcast hint: it grows with the
+# corpus (n_buckets = docs / salt_bucket_docs), and hints go on
+# known-small sides only — above the cap the planner decides.
+RANGE_BB_BROADCAST_ROWS = 1 << 20
+
+
+def _build_batch_protos(left: pd.DataFrame, decode, cache: bool = True):
+    """(protos, base_bm) for one kernel group's distinct term segment
+    rows: per term, a weight-neutral TermPostings prototype (its
+    max_score and block maxes are raw MICRO-unit maxima, not bounds —
+    ``_weighted`` turns a proto into one query's kernel term) and its
+    block maxes. With ``cache`` the protos carry a per-term
+    decoded-block cache shared by the group's queries
+    (CappedBlockCache beyond the working-set cap); query-major groups
+    hold one query and build none."""
+    protos: dict[int, TermPostings] = {}
+    base_bm: dict[int, np.ndarray] = {}
+    for term_id, g in left.groupby("term_id", sort=True):
+        g = g.sort_values("block_id")
+        tmax = float(g["term_max_score"].iloc[0])
+        if "max_score_q" in g.columns:
+            # wand_data_compressed recovery: u8 relative to term max
+            # (quantization rounded up at build -> still one-sided)
+            bm = g["max_score_q"].to_numpy(np.float64) / 255.0 * tmax
+        else:
+            bm = g["max_score"].to_numpy(np.float64)
+        tid = int(term_id)
+        base_bm[tid] = bm * MICRO
+        block_cache = None
+        if cache:
+            block_cache = {}
+            if int(g["count"].sum()) > BATCH_CACHE_MAX_POSTINGS:
+                # over-cap term: cache its first cap-worth of blocks
+                # (first-come) instead of disabling caching — see
+                # kernels.CappedBlockCache
+                block_cache = CappedBlockCache(BATCH_CACHE_MAX_POSTINGS)
+        protos[tid] = TermPostings(
+            term_id=tid,
+            df=float(g["df"].iloc[0]),
+            weight=1.0,
+            max_score=tmax * MICRO,
+            block_max_doc=g["max_doc_id"].to_numpy(np.uint64),
+            block_max_score=base_bm[tid],
+            block_count=g["count"].to_numpy(np.int64),
+            doc_payloads=[bytes(x) for x in g["doc_bytes"]],
+            tf_payloads=[bytes(x) for x in g["tf_bytes"]],
+            len_payloads=[bytes(x) for x in g["len_bytes"]],
+            decode=decode,
+            block_cache=block_cache,
+        )
+    return protos, base_bm
+
+
+def _weighted(proto: TermPostings, weight: float, bm_micro) -> TermPostings:
+    """``proto`` as a query term of ``weight``: its own bounds over the
+    proto's shared payloads and caches."""
+    return replace(
+        proto,
+        weight=weight,
+        max_score=_bound(weight, proto.max_score),
+        block_max_score=_bound(weight, bm_micro),
+    )
+
+
+def _group_to_terms(pdf: pd.DataFrame, decode) -> list[TermPostings]:
+    """One query's segment rows as its kernel term list, in term_id
+    order and with no block cache."""
+    protos, base_bm = _build_batch_protos(pdf, decode, cache=False)
+    weight = pdf.groupby("term_id")["weight"].first()
+    return [_weighted(p, float(weight[t]), base_bm[t]) for t, p in protos.items()]
+
+
+def _walk_batch_queries(right: pd.DataFrame, protos, base_bm, kernel, stats):
+    """Column-array walk over a group's (query-sorted) parsed rows —
+    no per-query pandas groupby/iterrows. Yields (query_id, docs,
+    scores) per query: protos weighted per query (shared
+    payload/caches), threshold bootstrap honored, per-query k from
+    the mandatory k column, idf caches shared back into the protos."""
+    r = right.sort_values("query_id", kind="stable")
+    q_ids = r["query_id"].to_numpy()
+    t_ids = r["term_id"].to_numpy()
+    weights = r["weight"].to_numpy(np.float64)
+    ks = r["k"].to_numpy()
+    thr = (
+        r["threshold_micro"].to_numpy(np.float64)
+        if "threshold_micro" in r
+        else None
+    )
+    i, n_rows = 0, len(r)
+    while i < n_rows:
+        j = i
+        terms = []
+        while j < n_rows and q_ids[j] == q_ids[i]:
+            proto = protos.get(int(t_ids[j]))
+            if proto is not None:
+                terms.append(_weighted(
+                    proto, float(weights[j]), base_bm[proto.term_id]
+                ))
+            j += 1
+        init = 0.0
+        if thr is not None and not np.isnan(thr[i]):
+            # estimate is a true lower bound; keep the quantization
+            # slack so boundary ties are never pruned
+            init = float(thr[i]) - PRUNE_EPS
+        docs, scores = kernel(terms, int(ks[i]), stats, init_threshold=init)
+        for tp in terms:  # idf grows once, shared thereafter
+            if tp.idf_cache is not None:
+                protos[tp.term_id].idf_cache = tp.idf_cache
+        yield q_ids[i], docs, scores
+        i = j
+
+
+def _run_group(left: pd.DataFrame, right: pd.DataFrame, decode, kernel,
+               stats: Stats, cache: bool, ranked: bool,
+               profile: bool = False) -> pd.DataFrame:
+    """The one kernel-task body. ``left``: a group's distinct term
+    segment rows (+ term stats); ``right``: its parsed query rows
+    (query_id, k, term_id, weight[, threshold_micro]). Returns
+    (query_id, rank, doc_id, score), or the unranked (query_id,
+    doc_id, score) partials of range execution, plus the group's
+    Profiler counters with ``profile``."""
+    if len(left) and not len(right):
+        # Ranged batch-major execution replicates each batch's queries
+        # to every real bucket (_topk). Fail loudly — returning empty
+        # here would silently drop this bucket's docs from the top-k.
+        raise RuntimeError(
+            "segment bucket "
+            f"{int(left['bucket'].iloc[0]) if 'bucket' in left else '?'} "
+            "outside the replicated query range — non-dense doc ids?"
+        )
+    Profiler.reset()
+    protos, base_bm = _build_batch_protos(left, decode, cache=cache)
+    out_q, out_d, out_s = [], [], []
+    for qid, docs, scores in _walk_batch_queries(
+        right, protos, base_bm, kernel, stats
+    ):
+        out_q.append(qid)
+        out_d.append(docs)
+        out_s.append(scores)
+    counts = [len(d) for d in out_d]
+    out = {"query_id": np.repeat(np.asarray(out_q, dtype=object), counts)}
+    if ranked:
+        out["rank"] = np.concatenate(
+            [np.arange(1, c + 1, dtype=np.int32) for c in counts]
+            + [np.empty(0, np.int32)]
+        )
+    out["doc_id"] = np.concatenate(out_d + [np.empty(0, np.int64)])
+    out["score"] = np.concatenate(out_s + [np.empty(0)])
+    out = pd.DataFrame(out)
+    if profile:
+        out["blocks_decoded"] = np.int64(Profiler.blocks)
+        out["postings_decoded"] = np.int64(Profiler.postings)
+    return out
+
+
+def live_ranges(rows: DataFrame) -> DataFrame:
+    """(query_id, bucket) ranges that can still beat their query's
+    threshold — the Catalyst form of wand_data_range.hpp
+    compute_live_blocks. ``rows`` is the (segments ⨝ parsed-with-
+    thresholds ⨝ bucket) table; a range's score upper bound is the
+    sum over query terms of the term's best ``_bound`` inside the
+    range. Queries with NULL thresholds keep every range."""
+    if "max_score_q" in rows.columns:  # wand_data_compressed segments
+        bm = F.col("max_score_q") / F.lit(255.0) * F.col("term_max_score")
+    else:
+        bm = F.col("max_score")
+    term_ub = rows.groupBy("query_id", "bucket", "term_id").agg(
+        F.max(_bound(F.col("weight"), bm * F.lit(MICRO))).alias("t_ub"),
+        F.first("threshold_micro").alias("thr"),
+    )
+    return (
+        term_ub.groupBy("query_id", "bucket")
+        .agg(
+            F.sum("t_ub").alias("range_ub"),
+            F.first("thr").alias("thr"),
+        )
+        .filter(
+            F.col("thr").isNull()
+            | (F.col("range_ub") > F.col("thr") - F.lit(float(PRUNE_EPS)))
+        )
+        .select("query_id", "bucket")
+    )
+
+
+def _merge_range_partials(partial: DataFrame, parsed: DataFrame) -> DataFrame:
+    """Shared heap merge for range execution (range_query.hpp's single
+    heap across ranges, in window form): rank the per-bucket partial
+    top-k rows per query and cap at the query's own k — the partials
+    already honored it. Query-count-sized k side -> broadcast."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("score").desc(), F.col("doc_id").asc()
+    )
+    qk = parsed.select("query_id", F.col("k").alias("merge_k")).distinct()
+    return (
+        partial.withColumn("rank", F.row_number().over(w))
+        .join(F.broadcast(qk), "query_id")
+        .filter(F.col("rank") <= F.col("merge_k"))
+        .select("query_id", F.col("rank").cast("int"), "doc_id", "score")
+    )
+
+
+def _topk(index: InvertedIndex, parsed: DataFrame, algorithm: str, k: int,
+          thresholds: DataFrame | None, scan_prune: bool | None,
+          ranges: bool, batched: bool = False, batches: int | None = None,
+          profile: bool = False) -> DataFrame:
+    """The ONE ranked top-k executor behind topk_search (one group per
+    query) and topk_search_batch (``batched``: ``batches`` hashed,
+    cogrouped groups); ``ranges`` splits every group by docID bucket
+    and merges the partial top-k."""
+    kernel = RANKED_KERNELS[algorithm]
+    cfg = index.config
+    decode = CODECS[cfg.index.codec][1]
+    stats = Stats(
+        float(index.num_docs), float(index.avg_len), cfg.bm25.k1,
+        cfg.bm25.b, bool(cfg.index.quantize_bits),
+    )
+    if profile and ranges:
+        raise ValueError("profile counts whole-list queries, not ranges")
+    if thresholds is not None:
+        if algorithm not in DISJUNCTIVE_ALGORITHMS:
+            raise ValueError(
+                f"threshold bootstrapping is unsound for conjunctive "
+                f"algorithm {algorithm!r}: the cached k-th single-term "
+                f"score can exceed the intersection's k-th score"
+            )
+        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
+    # A parsed frame without a per-query k column falls back to the k
+    # argument (the kernel groups and the range merge read the column).
+    if "k" not in parsed.columns:
+        parsed = parsed.withColumn("k", F.lit(int(k)))
+    schema = "query_id string, " + ("" if ranges else "rank int, ")
+    schema += "doc_id long, score double"
+    if profile:
+        schema += ", blocks_decoded long, postings_decoded long"
+    keys = ["batch_id" if batched else "query_id"]
+    if ranges:
+        keys.append("bucket")
+
+    def segment_rows(query_side: DataFrame) -> DataFrame:
+        rows = _factored_segment_rows(index, parsed, query_side, scan_prune)
+        if ranges:
+            # docID bucket = the segment salt bucket: range execution
+            # never re-shuffles segments across buckets
+            stride = F.lit(blocks_per_bucket(cfg.index))
+            rows = rows.withColumn(
+                "bucket", (F.col("block_id") / stride).cast("long")
+            )
+        return rows
+
+    if not batched:
+        rows = segment_rows(parsed)
+        if ranges and thresholds is not None:
+            # Live-range pruning in Catalyst. No broadcast hint: at
+            # 10^12 docs the live set can be large; the join keys
+            # match the following groupBy, so the shuffle is shared
+            # (AQE broadcasts small live sets on its own).
+            rows = rows.join(live_ranges(rows), keys)
+
+        def run(pdf: pd.DataFrame) -> pd.DataFrame:
+            # one query's rows; its distinct term rows are its parsed
+            # rows, in term_id order
+            right = pdf.drop_duplicates("term_id").sort_values("term_id")
+            return _run_group(pdf, right, decode, kernel, stats, cache=False,
+                              ranked=not ranges, profile=profile)
+
+        out = rows.groupBy(*keys).applyInPandas(run, schema)
+        return _merge_range_partials(out, parsed) if ranges else out
+
+    spark = index.segments.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    n_buckets = max(
+        1, math.ceil(max(int(index.num_docs), 1) / cfg.index.salt_bucket_docs)
+    )
+    if batches is None:
+        # Whole lists: 2x the cores (see topk_search_batch). Ranges:
+        # buckets are the parallelism axis at scale (batches -> 1,
+        # maximal payload sharing per bucket) and small corpora keep
+        # the cores busy via query batching; 1x, not 2x, because each
+        # (batch, bucket) group is already bucket-bounded, so a second
+        # wave buys less than the extra payload copies cost (measured
+        # at 100q/sf0.1: 1x par 0.63 s, 2x par 0.87 s).
+        batches = max(1, math.ceil(par / n_buckets)) if ranges else 2 * par
+    batch_expr = F.pmod(F.xxhash64("query_id"), F.lit(batches)).cast("int")
+    pq = parsed.withColumn("batch_id", batch_expr)
+    # Segments side: DISTINCT terms per batch (this dedup is the whole
+    # point) joined with term stats, then broadcast into the segment
+    # scan — segments still never shuffle and are never broadcast.
+    # batch_id is recomputed from `parsed` (not projected off `pq`) so
+    # the cogroup's two sides carry distinct attribute ids.
+    rows = segment_rows(
+        parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
+    )
+    n_parts = batches
+    if ranges and thresholds is not None:
+        # Live-range pruning in Catalyst (metadata columns only, so
+        # column pruning keeps payload bytes out of this pass): the
+        # (query, bucket) live set filters the replicated query side
+        # (the inner join adds each query's live buckets); its
+        # per-batch projection filters the payload-carrying side.
+        live = live_ranges(segment_rows(parsed)).localCheckpoint()
+        live_b = (
+            live.join(pq.select("query_id", "batch_id").distinct(), "query_id")
+            .select("batch_id", "bucket")
+            .distinct()
+        )
+        rows = rows.join(live_b, ["batch_id", "bucket"])
+        pq = pq.join(live, ["query_id"])
+    elif ranges:
+        # Replicate the batch's queries to every bucket: a pure
+        # driver-side (batches x n_buckets) literal table — NO segment
+        # pass (a data-derived distinct(batch, bucket) costs a full
+        # workload-metadata aggregation per call; measured ~0.2 s of
+        # the bench job). Sound because this engine's doc ids are
+        # DENSE by construction (build/ids.assign_global_ids;
+        # incremental generations stack contiguous offsets), so every
+        # real bucket < n_buckets; _run_group still fails loudly on a
+        # bucket outside the range rather than dropping its results.
+        bb = spark.range(int(batches)).select(
+            F.col("id").cast("int").alias("batch_id")
+        ).crossJoin(
+            spark.range(int(n_buckets)).select(F.col("id").alias("bucket"))
+        )
+        # broadcast hint only while the table is known small (it grows
+        # with the corpus; beyond the cap the planner chooses)
+        if batches * n_buckets <= RANGE_BB_BROADCAST_ROWS:
+            bb = F.broadcast(bb)
+        pq = pq.join(bb, "batch_id")
+    if ranges:
+        # ~one (batch, bucket) group per partition up to 4x the cores
+        # — beyond that, groups within a partition run sequentially
+        # inside one task, which is the right shape when buckets
+        # vastly outnumber cores (10^12-doc corpora).
+        n_parts = int(max(batches, min(batches * n_buckets, 4 * par)))
+    # Explicit repartition on BOTH cogroup sides: the cogroup's
+    # required hash distribution is then already satisfied, so no
+    # extra shuffle is planned — and the user-specified partition
+    # count is exempt from AQE coalescing, which otherwise merges
+    # these byte-light but CPU-heavy Python groups onto a fraction of
+    # the cores (measured: AQE coalesced 512 batches to 10 tasks).
+    rows = rows.repartition(n_parts, *keys)
+    pq = pq.repartition(n_parts, *keys)
+    out = rows.groupBy(*keys).cogroup(pq.groupBy(*keys)).applyInPandas(
+        lambda left, right: _run_group(
+            left, right, decode, kernel, stats, cache=True, ranked=not ranges
+        ),
+        schema,
+    )
+    return _merge_range_partials(out, parsed) if ranges else out
+
+
 def topk_search(
     index: InvertedIndex,
     parsed: DataFrame,
@@ -248,8 +580,10 @@ def topk_search(
     thresholds: DataFrame | None = None,
     profile: bool = False,
     scan_prune: bool | None = None,
+    ranges: bool = False,
 ) -> DataFrame:
-    """(query_id, rank, doc_id, score) — query-major execution.
+    """(query_id, rank, doc_id, score) — query-major execution: one
+    kernel group per query, the low-latency shape.
 
     ``thresholds``: optional (query_id, threshold_micro) sound lower
     bounds (thresholds.estimate_thresholds) that bootstrap each
@@ -262,55 +596,62 @@ def topk_search(
     ``profile``: adds (blocks_decoded, postings_decoded) per query —
     the reference's profile_queries/block_profiler counters — making
     pruning effectiveness measurable (a pruned kernel must decode
-    fewer blocks than the exhaustive one on the same query)."""
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
+    fewer blocks than the exhaustive one on the same query).
+    Whole-list execution only.
+
+    ``ranges``: doc-range-major execution (range_query.hpp: the
+    algorithm runs per docID range with a shared heap) — partial
+    top-k per (query, bucket) group, then a window merge. With
+    ``thresholds``, wand_data_range.hpp's live-block pruning drops a
+    range whose summed block-max bound cannot beat the threshold in a
+    Catalyst pre-filter, before any kernel task runs."""
+    return _topk(
+        index, parsed, algorithm, k, thresholds, scan_prune, ranges,
+        profile=profile,
     )
-    if thresholds is not None:
-        if algorithm not in DISJUNCTIVE_ALGORITHMS:
-            raise ValueError(
-                f"threshold bootstrapping is unsound for conjunctive "
-                f"algorithm {algorithm!r}: the cached k-th single-term "
-                f"score can exceed the intersection's k-th score"
-            )
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from pisa_spark.query.kernels import Profiler
 
-        terms = _group_to_terms(pdf, decode)
-        kk = int(pdf["k"].iloc[0]) if "k" in pdf else k
-        init = 0.0
-        if "threshold_micro" in pdf and pd.notna(pdf["threshold_micro"].iloc[0]):
-            # estimate is a true lower bound; keep the quantization
-            # slack so boundary ties are never pruned
-            init = float(pdf["threshold_micro"].iloc[0]) - PRUNE_EPS
-        Profiler.reset()
-        docs, scores = kernel(terms, kk, stats, init_threshold=init)
-        out = pd.DataFrame(
-            {
-                "query_id": pdf["query_id"].iloc[0],
-                "rank": np.arange(1, len(docs) + 1, dtype=np.int32),
-                "doc_id": docs,
-                "score": scores,
-            }
-        )
-        if profile:
-            out["blocks_decoded"] = np.int64(Profiler.blocks)
-            out["postings_decoded"] = np.int64(Profiler.postings)
-        return out
+def topk_search_batch(
+    index: InvertedIndex,
+    parsed: DataFrame,
+    algorithm: str = "block_max_maxscore",
+    k: int = 10,
+    thresholds: DataFrame | None = None,
+    batches: int | None = None,
+    scan_prune: bool | None = None,
+    ranges: bool = False,
+) -> DataFrame:
+    """(query_id, rank, doc_id, score) — BATCH-major execution: queries
+    hash into ``batches`` groups, each cogrouped with its batch's
+    DISTINCT term segment rows, so a term shared by Q queries crosses
+    the wire once per batch (query-major ships it Q times) and a
+    shared per-term block cache (TermPostings.block_cache, capped at
+    BATCH_CACHE_MAX_POSTINGS postings/term) decodes each block at most
+    once per batch. Same kernels, same results: only the per-query
+    weight/bound arrays are rebuilt per query. This is the amortized
+    shape a production workload wants (the reference amortizes the
+    same way through the OS page cache, tools/queries.cpp batch loop);
+    query-major stays the low-latency path.
 
-    schema = "query_id string, rank int, doc_id long, score double"
-    if profile:
-        schema += ", blocks_decoded long, postings_decoded long"
-    rows = _query_segments(index, parsed, scan_prune)
-    return rows.groupBy("query_id").applyInPandas(run, schema)
+    ``batches`` defaults to 2x the cluster's default parallelism —
+    the sharing/parallelism sweet spot measured in BENCH.md (at 3200
+    queries, sf0.1: 1x par = 3.7x over query-major but the largest
+    per-task frames; 2x = 2.9x; 4x = 2.3x; AQE-uncoalesced 16x =
+    1.2x): 2x halves 1x's working sets and smooths hash-collision
+    stragglers across two waves.
+
+    ``ranges``: the batch form of topk_search's range execution,
+    cogrouped on (batch_id, bucket): the batch's distinct terms'
+    blocks within the bucket against its queries replicated per live
+    bucket (metadata rows only — payloads never replicate), so no
+    task ever sees a full posting list. ``batches`` then defaults to
+    ceil(defaultParallelism / bucket count), and ``thresholds`` prune
+    dead (query, bucket) ranges off both sides before payloads ship.
+    """
+    return _topk(
+        index, parsed, algorithm, k, thresholds, scan_prune, ranges,
+        batched=True, batches=batches,
+    )
 
 
 def topk_search_safe(
@@ -416,567 +757,7 @@ def boolean_query(
         docs = kernel(_group_to_terms(pdf, decode))
         return pd.DataFrame({"query_id": pdf["query_id"].iloc[0], "doc_id": docs})
 
-    rows = _query_segments(index, parsed, scan_prune)
+    rows = _factored_segment_rows(index, parsed, parsed, scan_prune)
     return rows.groupBy("query_id").applyInPandas(
         run, "query_id string, doc_id long"
     )
-
-
-def live_ranges(rows: DataFrame) -> DataFrame:
-    """(query_id, bucket) ranges that can still beat their query's
-    threshold — the Catalyst form of wand_data_range.hpp
-    compute_live_blocks. ``rows`` is the (segments ⨝ parsed-with-
-    thresholds ⨝ bucket) table; a range's score upper bound is the
-    sum over query terms of the term's best weighted block-max inside
-    the range (micro units, +1 quantization margin exactly like
-    _group_to_terms). Queries with NULL thresholds keep every range."""
-    if "max_score_q" in rows.columns:  # wand_data_compressed segments
-        bm = F.col("max_score_q") / F.lit(255.0) * F.col("term_max_score")
-    else:
-        bm = F.col("max_score")
-    term_ub = rows.groupBy("query_id", "bucket", "term_id").agg(
-        (F.max(F.col("weight") * bm) * F.lit(MICRO)
-         + F.lit(1.0)).alias("t_ub"),
-        F.first("threshold_micro").alias("thr"),
-    )
-    return (
-        term_ub.groupBy("query_id", "bucket")
-        .agg(
-            F.sum("t_ub").alias("range_ub"),
-            F.first("thr").alias("thr"),
-        )
-        .filter(
-            F.col("thr").isNull()
-            | (F.col("range_ub") > F.col("thr") - F.lit(float(PRUNE_EPS)))
-        )
-        .select("query_id", "bucket")
-    )
-
-
-def topk_range(
-    index: InvertedIndex,
-    parsed: DataFrame,
-    algorithm: str = "maxscore",
-    k: int = 10,
-    blocks_per_range: int | None = None,
-    thresholds: DataFrame | None = None,
-    scan_prune: bool | None = None,
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) — doc-range-major execution
-    (range_query.hpp: run the algorithm per docID range with a shared
-    heap; Spark shape = partial top-k per range + window merge).
-
-    No global doc-length structure exists anywhere: lengths ride
-    inside each block's ``len_bytes`` payload, so every (query,
-    bucket) task is self-contained. Bucket granularity reuses the
-    segment salt buckets (segments never re-shuffle across buckets).
-
-    ``thresholds`` (query_id, threshold_micro — sound lower bounds on
-    the k-th final score, disjunctive algorithms only) enables the
-    LIVE-BLOCK pruning of wand_data_range.hpp compute_live_blocks:
-    a (query, bucket) range whose summed per-term block-max upper
-    bound cannot beat the threshold is dropped by a pure Catalyst
-    pre-filter BEFORE any kernel task runs — dead ranges cost one
-    aggregation row, not a Python group."""
-    from pisa_spark.build.segments import blocks_per_bucket
-
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    cfg = index.config.index
-    bucket_stride = blocks_per_bucket(cfg)
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
-    )
-
-    if thresholds is not None and algorithm not in DISJUNCTIVE_ALGORITHMS:
-        raise ValueError(
-            f"threshold bootstrapping is unsound for conjunctive "
-            f"algorithm {algorithm!r}"
-        )
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        terms = _group_to_terms(pdf, decode)
-        kk = int(pdf["k"].iloc[0]) if "k" in pdf else k
-        init = 0.0
-        if "threshold_micro" in pdf and pd.notna(pdf["threshold_micro"].iloc[0]):
-            init = float(pdf["threshold_micro"].iloc[0]) - PRUNE_EPS
-        docs, scores = kernel(terms, kk, stats, init_threshold=init)
-        return pd.DataFrame(
-            {
-                "query_id": pdf["query_id"].iloc[0],
-                "doc_id": docs,
-                "score": scores,
-            }
-        )
-
-    if thresholds is not None:
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
-    rows = _query_segments(index, parsed, scan_prune).withColumn(
-        "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
-    )
-    if thresholds is not None:
-        # no broadcast hint: at 10^12 docs the live set can be large;
-        # the join keys match the following groupBy, so the shuffle is
-        # shared (AQE broadcasts small live sets on its own)
-        rows = rows.join(live_ranges(rows), ["query_id", "bucket"])
-    partial = rows.groupBy("query_id", "bucket").applyInPandas(
-        run, "query_id string, doc_id long, score double"
-    )
-    return _merge_range_partials(partial, parsed, k)
-
-
-def _merge_range_partials(
-    partial: DataFrame, parsed: DataFrame, k: int
-) -> DataFrame:
-    """Shared heap merge for range execution (range_query.hpp's single
-    heap across ranges, in window form): rank the per-bucket partial
-    top-k rows per query and cap at the query's k."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    merged = partial.withColumn("rank", F.row_number().over(w))
-    if "k" in parsed.columns:
-        # Per-query k parity with topk_search: each bucket's partial
-        # already honored the query's own k, so the merge must cap at
-        # the same per-query value (the arg k is only the no-column
-        # fallback). Query-count-sized side -> broadcast.
-        qk = parsed.select("query_id", F.col("k").alias("merge_k")).distinct()
-        merged = merged.join(F.broadcast(qk), "query_id").filter(
-            F.col("rank") <= F.col("merge_k")
-        )
-    else:
-        merged = merged.filter(F.col("rank") <= k)
-    return merged.select(
-        "query_id", F.col("rank").cast("int"), "doc_id", "score"
-    )
-
-
-# Working-set cap for the batch-major decoded-block cache: beyond
-# this many cached postings per term the cache stops growing (blocks
-# decode again per query, exactly as query-major execution). Bounds
-# task memory at ~24 bytes/posting regardless of batch composition.
-BATCH_CACHE_MAX_POSTINGS = 1 << 22
-
-# Row cap under which topk_range_batch's (batch x bucket) query-
-# replication table keeps its broadcast hint; it grows linearly with
-# the corpus (n_buckets = docs / salt_bucket_docs), and the repo rule
-# is hints on known-small sides only — above the cap the planner
-# decides.
-RANGE_BB_BROADCAST_ROWS = 1 << 20
-
-
-def _build_batch_protos(left: pd.DataFrame, decode):
-    """(protos, base_bm) for one cogroup's distinct term segment rows
-    — the per-batch TermPostings prototypes both batch-major executors
-    (topk_search_batch, topk_range_batch) share: weight-neutral bounds
-    (weight rebound per query via dataclasses.replace), a shared
-    per-term decoded-block cache, CappedBlockCache beyond the
-    working-set cap."""
-    protos: dict[int, TermPostings] = {}
-    base_bm: dict[int, np.ndarray] = {}
-    for term_id, g in left.groupby("term_id", sort=True):
-        g = g.sort_values("block_id")
-        tmax = float(g["term_max_score"].iloc[0])
-        if "max_score_q" in g.columns:
-            bm = g["max_score_q"].to_numpy(np.float64) / 255.0 * tmax
-        else:
-            bm = g["max_score"].to_numpy(np.float64)
-        tid = int(term_id)
-        base_bm[tid] = bm * MICRO
-        cache: dict = {}
-        if int(g["count"].sum()) > BATCH_CACHE_MAX_POSTINGS:
-            # over-cap term: cache its first cap-worth of blocks
-            # (first-come) instead of disabling caching — see
-            # kernels.CappedBlockCache
-            cache = CappedBlockCache(BATCH_CACHE_MAX_POSTINGS)
-        protos[tid] = TermPostings(
-            term_id=tid,
-            df=float(g["df"].iloc[0]),
-            weight=1.0,
-            max_score=tmax * MICRO + 1.0,
-            block_max_doc=g["max_doc_id"].to_numpy(np.uint64),
-            block_max_score=base_bm[tid] + 1.0,
-            block_count=g["count"].to_numpy(np.int64),
-            doc_payloads=[bytes(x) for x in g["doc_bytes"]],
-            tf_payloads=[bytes(x) for x in g["tf_bytes"]],
-            len_payloads=[bytes(x) for x in g["len_bytes"]],
-            decode=decode,
-            block_cache=cache,
-        )
-    return protos, base_bm
-
-
-def _walk_batch_queries(right: pd.DataFrame, protos, base_bm, kernel, stats):
-    """Column-array walk over a batch's (query-sorted) parsed rows —
-    no per-query pandas groupby/iterrows. Yields (query_id, docs,
-    scores) per query: protos rebound to the query's weights (shared
-    payload/caches), threshold bootstrap honored, per-query k from
-    the mandatory k column, idf caches shared back into the protos."""
-    from dataclasses import replace
-
-    r = right.sort_values("query_id", kind="stable")
-    q_ids = r["query_id"].to_numpy()
-    t_ids = r["term_id"].to_numpy()
-    weights = r["weight"].to_numpy(np.float64)
-    ks = r["k"].to_numpy()
-    thr = (
-        r["threshold_micro"].to_numpy(np.float64)
-        if "threshold_micro" in r
-        else None
-    )
-    i, n_rows = 0, len(r)
-    while i < n_rows:
-        j = i
-        terms = []
-        while j < n_rows and q_ids[j] == q_ids[i]:
-            proto = protos.get(int(t_ids[j]))
-            if proto is not None:
-                w = float(weights[j])
-                terms.append(replace(
-                    proto,
-                    weight=w,
-                    max_score=w * (proto.max_score - 1.0) + 1.0,
-                    block_max_score=w * base_bm[proto.term_id] + 1.0,
-                ))
-            j += 1
-        init = 0.0
-        if thr is not None and not np.isnan(thr[i]):
-            init = float(thr[i]) - PRUNE_EPS
-        docs, scores = kernel(terms, int(ks[i]), stats, init_threshold=init)
-        for tp in terms:  # idf grows once, shared thereafter
-            if tp.idf_cache is not None:
-                protos[tp.term_id].idf_cache = tp.idf_cache
-        yield q_ids[i], docs, scores
-        i = j
-
-
-def topk_search_batch(
-    index: InvertedIndex,
-    parsed: DataFrame,
-    algorithm: str = "block_max_maxscore",
-    k: int = 10,
-    thresholds: DataFrame | None = None,
-    batches: int | None = None,
-    scan_prune: bool | None = None,
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) — BATCH-major execution.
-
-    Query-major `topk_search` ships each query's term lists to its
-    own task: a term shared by Q queries is Arrow-transferred and
-    block-decoded Q times. This variant hashes queries into
-    ``batches`` groups and cogroups (distinct term segments per
-    batch) with (the batch's query table): every term's list crosses
-    the wire ONCE per batch, and a shared per-term block cache
-    (TermPostings.block_cache) decodes each block at most once per
-    batch. Same kernels, same results — per-query weight/bound
-    fields are rebuilt per query (cheap per-block arrays), while the
-    decoded payloads and the weight-independent idf cache are shared.
-
-    This is the amortized shape a production workload wants (the
-    reference amortizes the same way through the OS page cache on a
-    resident index, tools/queries.cpp batch loop); query-major stays
-    the low-latency path. Parallelism = ``batches`` tasks; per-task
-    working set = the batch's distinct lists (same head-term caveat
-    as topk_search — use topk_range for beyond-task-size lists), with
-    cache growth capped at BATCH_CACHE_MAX_POSTINGS postings/term.
-
-    ``batches`` defaults to 2x the cluster's default parallelism —
-    the sharing/parallelism sweet spot measured in BENCH.md (at 3200
-    queries, sf0.1: 1x par = 3.7x over query-major but the largest
-    per-task frames; 2x = 2.9x; 4x = 2.3x; AQE-uncoalesced 16x =
-    1.2x). Fewer batches share more but each task's distinct-term
-    frame grows; 2x keeps working sets half the size of 1x and
-    smooths hash-collision stragglers across two waves. Both cogroup
-    sides are explicitly ``repartition(batches, batch_id)`` — the
-    count is then exempt from AQE coalescing, which otherwise merges
-    these byte-light, CPU-heavy Python groups onto a fraction of the
-    cores (measured: 512 batches coalesced to 10 tasks).
-    """
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
-    )
-    if thresholds is not None:
-        if algorithm not in DISJUNCTIVE_ALGORITHMS:
-            raise ValueError(
-                f"threshold bootstrapping is unsound for conjunctive "
-                f"algorithm {algorithm!r}: the cached k-th single-term "
-                f"score can exceed the intersection's k-th score"
-            )
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
-
-    # Parity with topk_search: a parsed frame without a per-query k
-    # column falls back to the k argument (query-major reads it
-    # row-wise inside the UDF; here the column must exist before the
-    # cogroup ships it).
-    if "k" not in parsed.columns:
-        parsed = parsed.withColumn("k", F.lit(int(k)))
-
-    if batches is None:
-        batches = 2 * index.segments.sparkSession.sparkContext.defaultParallelism
-    batch_expr = F.pmod(F.xxhash64("query_id"), F.lit(batches)).cast("int")
-    # Explicit repartition(batches) on BOTH cogroup sides: the
-    # cogroup's required hash distribution on batch_id is already
-    # satisfied, so no extra shuffle is planned — and the
-    # user-specified partition count is exempt from AQE coalescing,
-    # which otherwise merges these byte-light but CPU-heavy Python
-    # groups onto a fraction of the cores (measured: AQE coalesced
-    # 512 batches to 10 tasks; pinning restored full parallelism).
-    pq = parsed.withColumn("batch_id", batch_expr).repartition(
-        batches, "batch_id"
-    )
-    # Segments side: DISTINCT terms per batch (this dedup is the whole
-    # point) joined with term stats, then broadcast into the segment
-    # scan — segments still never shuffle and are never broadcast.
-    # batch_id is recomputed from `parsed` (not projected off `pq`) so
-    # the cogroup's two sides carry distinct attribute ids.
-    bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
-    rows = _factored_segment_rows(index, parsed, bt, scan_prune)
-
-    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left: the batch's distinct term segment rows (+ term stats);
-        # right: the batch's parsed queries (query_id, k, term_id,
-        # weight[, threshold_micro]). Shared proto build + query walk
-        # (_build_batch_protos/_walk_batch_queries); one output frame.
-        protos, base_bm = _build_batch_protos(left, decode)
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-        out_n: list = []
-        for qid, docs, scores in _walk_batch_queries(
-            right, protos, base_bm, kernel, stats
-        ):
-            out_q.append(qid)
-            out_d.append(docs)
-            out_s.append(scores)
-            out_n.append(len(docs))
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype=object),
-                 "rank": pd.Series(dtype=np.int32),
-                 "doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)}
-            )
-        counts = np.asarray(out_n)
-        return pd.DataFrame(
-            {
-                "query_id": np.repeat(np.asarray(out_q, dtype=object), counts),
-                "rank": np.concatenate(
-                    [np.arange(1, c + 1, dtype=np.int32) for c in out_n]
-                ),
-                "doc_id": np.concatenate(out_d) if out_d else np.empty(0, np.int64),
-                "score": np.concatenate(out_s) if out_s else np.empty(0),
-            }
-        )
-
-    schema = "query_id string, rank int, doc_id long, score double"
-    rows = rows.repartition(batches, "batch_id")  # AQE-coalesce exempt
-    return rows.groupBy("batch_id").cogroup(pq.groupBy("batch_id")).applyInPandas(
-        lambda left, right: run(left, right), schema
-    )
-
-
-def topk_range_batch(
-    index: InvertedIndex,
-    parsed: DataFrame,
-    algorithm: str = "maxscore",
-    k: int = 10,
-    thresholds: DataFrame | None = None,
-    batches: int | None = None,
-    scan_prune: bool | None = None,
-) -> DataFrame:
-    """(query_id, rank, doc_id, score) — BATCH-major RANGE execution.
-
-    ``topk_range`` ships each (query, docID-bucket) group its own copy
-    of the bucket's term blocks: a term shared by Q queries is
-    Arrow-transferred and block-decoded Q times per bucket — the same
-    per-query payload duplication topk_search_batch removes for the
-    query-major path (reference analogue: range_query.hpp's shared
-    per-range state amortized across the tools/queries.cpp batch loop
-    via the resident index). This variant cogroups on
-    (batch_id, bucket): LEFT = the batch's DISTINCT terms' blocks
-    within the bucket (each list crosses the wire once per batch per
-    bucket, decoded at most once via the shared per-term block cache);
-    RIGHT = the batch's parsed queries replicated per live bucket
-    (fixed-width metadata rows only — payload bytes never replicate).
-    Kernels then run per query over the bucket-local protos exactly as
-    topk_range's per-group kernel would, and the partial top-k rows
-    merge through the same shared-heap window — results are identical
-    by construction.
-
-    Scale shape: parallelism = batches x buckets tasks; per-task
-    working set = the batch's distinct lists WITHIN ONE BUCKET, so the
-    head-term caveat of topk_search_batch does not apply — no task
-    ever sees a full posting list, same as topk_range. ``batches``
-    defaults to ceil(defaultParallelism / bucket-count): buckets
-    already provide the parallelism axis at scale (batches -> 1, full
-    sharing per bucket), while small corpora (few buckets) keep the
-    cores busy via query batching.
-
-    ``thresholds`` enables the same Catalyst live-range pre-filter as
-    topk_range (wand_data_range.hpp compute_live_blocks): the
-    (query, bucket) live set prunes the replicated query side, and its
-    per-batch projection prunes dead buckets off the segment side
-    before any payload ships.
-    """
-    import math
-
-    from pisa_spark.build.segments import blocks_per_bucket
-
-    kernel = RANKED_KERNELS[algorithm]
-    decode = CODECS[index.config.index.codec][1]
-    cfg = index.config.index
-    bucket_stride = blocks_per_bucket(cfg)
-    stats = Stats(
-        num_docs=float(index.num_docs),
-        avg_len=float(index.avg_len),
-        k1=index.config.bm25.k1,
-        b=index.config.bm25.b,
-        quantized=bool(index.config.index.quantize_bits),
-    )
-    if thresholds is not None:
-        if algorithm not in DISJUNCTIVE_ALGORITHMS:
-            raise ValueError(
-                f"threshold bootstrapping is unsound for conjunctive "
-                f"algorithm {algorithm!r}"
-            )
-        parsed = parsed.join(F.broadcast(thresholds), "query_id", "left")
-    merge_parsed = parsed  # k-column presence decides the merge cap
-    if "k" not in parsed.columns:
-        parsed = parsed.withColumn("k", F.lit(int(k)))
-
-    par = index.segments.sparkSession.sparkContext.defaultParallelism
-    n_buckets = max(
-        1, math.ceil(max(int(index.num_docs), 1) / cfg.salt_bucket_docs)
-    )
-    if batches is None:
-        # Buckets are the parallelism axis at scale (batches -> 1,
-        # maximal payload sharing per bucket); small corpora (few
-        # buckets) keep the cores busy via query batching. 1x the
-        # cores — unlike topk_search_batch's 2x — because each
-        # (batch, bucket) group is already bucket-bounded, so the
-        # straggler-smoothing second wave buys less than the extra
-        # payload copies cost (measured at 100q/sf0.1: 1x par 0.63 s,
-        # 2x par 0.87 s).
-        batches = max(1, math.ceil(par / n_buckets))
-    batch_expr = F.pmod(F.xxhash64("query_id"), F.lit(batches)).cast("int")
-    pq = parsed.withColumn("batch_id", batch_expr)
-    # Segment side: distinct terms per batch (the dedup that removes
-    # the per-query payload copies), bucketed exactly as topk_range.
-    bt = parsed.select(batch_expr.alias("batch_id"), "term_id").distinct()
-    rows = _factored_segment_rows(index, parsed, bt, scan_prune).withColumn(
-        "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
-    )
-    if thresholds is not None:
-        # Live-range pruning in Catalyst (metadata columns only — the
-        # aggregate reads block maxes/weights, so column pruning keeps
-        # payload bytes out of this pass): the per-(query, bucket)
-        # live set filters the replicated query side; its per-batch
-        # bucket projection filters the payload-carrying segment side.
-        qmeta = _query_segments(index, parsed, scan_prune).withColumn(
-            "bucket", (F.col("block_id") / F.lit(bucket_stride)).cast("long")
-        )
-        live = live_ranges(qmeta).localCheckpoint()
-        live_b = (
-            live.join(pq.select("query_id", "batch_id").distinct(), "query_id")
-            .select("batch_id", "bucket")
-            .distinct()
-        )
-        rows = rows.join(live_b, ["batch_id", "bucket"])
-        # inner join on query_id adds the query's live buckets — the
-        # replication step for this path, restricted to live ranges
-        pq = pq.join(live, ["query_id"])
-    else:
-        # Replicate the batch's queries to every bucket: a pure
-        # driver-side (batches x n_buckets) literal table — NO segment
-        # pass (a data-derived distinct(batch, bucket) costs a full
-        # workload-metadata aggregation per call; measured ~0.2 s of
-        # the bench job). Sound because this engine's doc ids are
-        # DENSE by construction (build/ids.assign_global_ids;
-        # incremental generations stack contiguous offsets), so every
-        # real bucket < ceil(num_docs / salt_bucket_docs); the kernel
-        # below still guards loudly against a bucket outside the
-        # range (left rows with no replicated queries) rather than
-        # ever dropping results silently.
-        spark = index.segments.sparkSession
-        bb = spark.range(int(batches)).select(
-            F.col("id").cast("int").alias("batch_id")
-        ).crossJoin(
-            spark.range(int(n_buckets)).select(F.col("id").alias("bucket"))
-        )
-        # Broadcast hint only while the replication table is known
-        # small (repo rule: hints on counted-small sides only). At
-        # 10^12 docs n_buckets ~ 10^6 and the table grows linearly
-        # with the corpus — beyond the cap the hint comes off and the
-        # planner (AQE) chooses; the join itself stays the same.
-        if batches * n_buckets <= RANGE_BB_BROADCAST_ROWS:
-            bb = F.broadcast(bb)
-        pq = pq.join(bb, "batch_id")
-
-    def run(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # left: the (batch, bucket)'s distinct term blocks (+ stats);
-        # right: the batch's parsed queries for this bucket. Shared
-        # proto build + query walk (_build_batch_protos/
-        # _walk_batch_queries); output is UNranked partials for the
-        # window merge.
-        if len(left) and not len(right):
-            # Every real bucket must have received the batch's query
-            # replica (see the bb construction above). Fail loudly —
-            # returning empty here would silently drop this bucket's
-            # docs from the top-k.
-            raise RuntimeError(
-                "topk_range_batch: segment bucket "
-                f"{int(left['bucket'].iloc[0]) if 'bucket' in left else '?'} "
-                "outside the replicated query range — non-dense doc ids?"
-            )
-        protos, base_bm = _build_batch_protos(left, decode)
-        out_q: list = []
-        out_d: list = []
-        out_s: list = []
-        for qid, docs, scores in _walk_batch_queries(
-            right, protos, base_bm, kernel, stats
-        ):
-            if len(docs):
-                out_q.append(np.repeat(qid, len(docs)))
-                out_d.append(docs)
-                out_s.append(scores)
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": pd.Series(dtype=object),
-                 "doc_id": pd.Series(dtype=np.int64),
-                 "score": pd.Series(dtype=np.float64)}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-            }
-        )
-
-    # Pinned partition count (AQE-coalesce exempt, same rationale as
-    # topk_search_batch): ~one (batch, bucket) group per partition up
-    # to 4x the cores — beyond that, groups within a partition run
-    # sequentially inside one task, which is the right shape when
-    # buckets vastly outnumber cores (10^12-doc corpora).
-    n_parts = int(max(batches, min(batches * n_buckets, 4 * par)))
-    rows = rows.repartition(n_parts, "batch_id", "bucket")
-    pq = pq.repartition(n_parts, "batch_id", "bucket")
-    partial = (
-        rows.groupBy("batch_id", "bucket")
-        .cogroup(pq.groupBy("batch_id", "bucket"))
-        .applyInPandas(
-            lambda left, right: run(left, right),
-            "query_id string, doc_id long, score double",
-        )
-    )
-    return _merge_range_partials(partial, merge_parsed, k)

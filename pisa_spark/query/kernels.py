@@ -3,7 +3,7 @@
 These are the engine's custom operators — the part of the reference
 Spark genuinely lacks (cursor-based dynamic pruning,
 query/algorithm/*.hpp). They run inside ``applyInPandas`` groups
-(executor.py), one query per group, all array math vectorized.
+(executor.py), one kernel call per query, all array math vectorized.
 
 Result semantics (every kernel, pinned by tests vs the SQL oracle,
 mirroring the reference's own agreement tests
@@ -102,10 +102,11 @@ class TermPostings:
     decode: object  # codec decode fn
     idf_cache: object = None  # lazily-built constant-idf array (_score)
     # Optional shared decoded-block cache {block_idx: (docs, tfs,
-    # lens)} — populated when batch-major execution (executor.
-    # topk_search_batch) runs many queries over the same term in one
-    # task, so each block decodes at most once per batch. None in
-    # query-major execution (one query per task; nothing to share).
+    # lens)} — populated when a kernel group holds many queries over
+    # the same term (executor._build_batch_protos under
+    # topk_search_batch), so each block decodes at most once per
+    # batch. None in topk_search's query-major groups (one query per
+    # group; nothing to share).
     block_cache: object = None
 
     def decode_block(self, bi: int) -> tuple[np.ndarray, np.ndarray, np.ndarray]:

@@ -100,6 +100,9 @@ def aol_queries(lines: DataFrame, unique: bool = False) -> DataFrame:
         & (F.col("query") != "-")
     )
     if unique:
+        # Unpartitioned window (Spark warns "No Partition Defined"),
+        # benign: it numbers the distinct() output, which the
+        # map-side combine shrinks to the log's unique queries.
         w = F.row_number().over(Window.orderBy("query")) - 1
         return q.select("query").distinct().select(
             w.cast("string").alias("query_id"), "query"

@@ -41,8 +41,8 @@ rewritten):
   ``idf(df, N_new)/idf(df, N_old) * max(1, avg_new/avg_old)``
   per generation for untouched terms (re-encoded terms reset to 1).
   The executor multiplies both the term max and the block maxes by it
-  on the query path (executor._query_segments, which already joins
-  term_meta into every query) — bounds stay one-sided, kernels stay
+  on the query path (executor._factored_segment_rows, which already
+  joins term_meta into every query) — bounds stay one-sided, kernels stay
   exact, stored segments stay immutable. The factor only compounds
   for terms never re-touched; ``compact()`` resets it to 1 exactly.
 - ``stream_pages``/``run_stream_indexing``: Structured Streaming
@@ -163,7 +163,7 @@ class IncrementalIndexer:
         # compress_blockmax IS supported: u8 block maxima are relative
         # to the term max AS STORED in term_meta at encode time, and
         # the query-side recovery multiplies term_max * bound_factor
-        # (executor._query_segments) — so kept blocks' recovered
+        # (executor._factored_segment_rows) — so kept blocks' recovered
         # bounds inflate by exactly the same sound factor as f32
         # bounds, and re-encoded terms reset max+factor together.
         if self.config.index.quantize_bits:

@@ -251,6 +251,68 @@ def test_cap_helpers_and_shared_dropped_frame(spark):
         assert sorted(r["id"] for r in kept.collect()) == [4]
 
 
+def test_dropped_frame_from_smaller_cap_is_refiltered(spark, emb):
+    """A dropped= frame built at a SMALLER cap than the call's own must
+    not drop the groups between the two caps: every capped pair
+    generator re-filters it at its own cap (caps.apply_cap), so the
+    output equals the call without dropped=."""
+    from pisa_spark.datapipe.dedup import (
+        minhash_dropped_buckets, minhash_lsh_pairs, simhash_dropped_chunks,
+        simhash_pairs,
+    )
+    from pisa_spark.datapipe.similarity import (
+        embedding_dropped_cells, embedding_dup_pairs,
+    )
+
+    def pairs(df, a="doc_a", b="doc_b"):
+        return sorted(map(tuple, df.select(a, b).collect()))
+
+    one = spark.read.parquet(f"{SF}/documents.parquet").limit(1)
+    clones = one
+    for i in range(1, 8):
+        clones = clones.unionByName(
+            one.withColumn("doc_id", F.col("doc_id") + 1000 * i)
+        )
+    clones = clones.localCheckpoint(eager=True)
+    # 8 identical docs: a cap-4 frame lists every bucket they share
+    for dropped_fn, pairs_fn in (
+        (minhash_dropped_buckets, minhash_lsh_pairs),
+        (simhash_dropped_chunks, simhash_pairs),
+    ):
+        small = dropped_fn(clones, max_bucket=4).localCheckpoint(eager=True)
+        assert small.count() > 0
+        want = pairs(pairs_fn(clones, max_bucket=64))
+        assert len(want) == 28
+        got = pairs(pairs_fn(clones, max_bucket=64, dropped=small))
+        assert got == want
+
+    # 30 near-identical vectors: one dominant IVF cell over a cap of 20
+    base = emb.limit(40).toPandas()
+    dim = len(base["embedding"].iloc[0])
+    dom = pd.DataFrame({
+        "vec_id": [10_000 + i for i in range(30)],
+        "embedding": [[1.0 + 1e-4 * i] + [0.0] * (dim - 1) for i in range(30)],
+    })
+    vecs = spark.createDataFrame(
+        pd.concat([base[["vec_id", "embedding"]], dom]),
+        schema="vec_id long, embedding array<double>",
+    )
+    small = embedding_dropped_cells(vecs, max_cell=20).localCheckpoint(eager=True)
+    assert small.count() > 0
+    want = pairs(
+        embedding_dup_pairs(vecs, tau_micro=999_000, max_cell=10_000),
+        "vec_a", "vec_b",
+    )
+    assert want
+    got = pairs(
+        embedding_dup_pairs(
+            vecs, tau_micro=999_000, max_cell=10_000, dropped=small
+        ),
+        "vec_a", "vec_b",
+    )
+    assert got == want
+
+
 def test_connected_components_chain_converges_logarithmically(spark):
     """A 64-node duplicate CHAIN (worst case for min-label
     propagation, which needs O(diameter)=63 rounds) must resolve to

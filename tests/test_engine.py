@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pisa_spark.config import EngineConfig, IndexConfig
 from pisa_spark.corpus import synth_pages, synth_queries
 from pisa_spark.index import build_index
-from pisa_spark.query.executor import boolean_query, topk_range, topk_search
+from pisa_spark.query.executor import boolean_query, topk_search
 from pisa_spark.query.parser import parse_queries
 
 N_DOCS = 400
@@ -148,7 +148,9 @@ def test_kernels_match_oracle(index, parsed, oracle_topk, algorithm):
 
 
 def test_range_executor_matches_oracle(index, parsed, oracle_topk):
-    got = _fetch(topk_range(index, parsed, algorithm="maxscore", k=10))
+    got = _fetch(
+        topk_search(index, parsed, algorithm="maxscore", k=10, ranges=True)
+    )
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]], exp[["query_id", "rank", "doc_id"]]
@@ -1244,9 +1246,9 @@ def test_estimator_mixed_k_soundness(spark, index, parsed):
 
 def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     """Live-range pruning (wand_data_range compute_live_blocks in
-    Catalyst): bootstrapped topk_range stays rank-identical while the
-    live-range filter provably drops dead (query, bucket) groups."""
-    from pisa_spark.query.executor import _query_segments, live_ranges
+    Catalyst): bootstrapped range execution stays rank-identical while
+    the live-range filter provably drops dead (query, bucket) groups."""
+    from pisa_spark.query.executor import _factored_segment_rows, live_ranges
     from pisa_spark.query.thresholds import (
         estimate_thresholds_with_pairs, kth_score_cache,
     )
@@ -1254,7 +1256,10 @@ def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     cache = kth_score_cache(index, k=10)
     est = estimate_thresholds_with_pairs(index, parsed, cache, k=10)
     got = _fetch(
-        topk_range(index, parsed, algorithm="maxscore", k=10, thresholds=est)
+        topk_search(
+            index, parsed, algorithm="maxscore", k=10, thresholds=est,
+            ranges=True,
+        )
     )
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
     pd.testing.assert_frame_equal(
@@ -1265,16 +1270,18 @@ def test_range_live_prefilter(spark, index, parsed, oracle_topk):
     from pisa_spark.build.segments import blocks_per_bucket
 
     stride = blocks_per_bucket(index.config.index)
-    rows = _query_segments(
-        index, parsed.join(F.broadcast(est), "query_id", "left")
+    bootstrapped = parsed.join(F.broadcast(est), "query_id", "left")
+    rows = _factored_segment_rows(
+        index, bootstrapped, bootstrapped, None
     ).withColumn("bucket", (F.col("block_id") / F.lit(stride)).cast("long"))
     total = rows.select("query_id", "bucket").distinct().count()
     live = live_ranges(rows).count()
     assert live < total, (live, total)
 
     with pytest.raises(ValueError, match="unsound"):
-        topk_range(
-            index, parsed, algorithm="ranked_and", k=10, thresholds=est
+        topk_search(
+            index, parsed, algorithm="ranked_and", k=10, thresholds=est,
+            ranges=True,
         )
 
 
@@ -1346,7 +1353,9 @@ def test_batched_kernels_match_daat(index, parsed, spark):
     import numpy as np
 
     from pisa_spark.codecs import CODECS
-    from pisa_spark.query.executor import _group_to_terms, _query_segments
+    from pisa_spark.query.executor import (
+        _factored_segment_rows, _group_to_terms,
+    )
     from pisa_spark.query.kernels import (
         Stats,
         block_max_wand_kernel,
@@ -1362,7 +1371,7 @@ def test_batched_kernels_match_daat(index, parsed, spark):
     )
     from pisa_spark.query.kernels import PRUNE_EPS, ranked_or_kernel
 
-    pdf = _query_segments(index, parsed).toPandas()
+    pdf = _factored_segment_rows(index, parsed, parsed, None).toPandas()
     n_q = 0
     for _, g in pdf.groupby("query_id"):
         terms = _group_to_terms(g, decode)
@@ -1477,7 +1486,9 @@ def test_range_executor_heterogeneous_k_matches_query_major(index, parsed):
         .otherwise(F.lit(9)),
     )
     exp = _fetch(topk_search(index, mixed, algorithm="maxscore", k=10))
-    got = _fetch(topk_range(index, mixed, algorithm="maxscore", k=10))
+    got = _fetch(
+        topk_search(index, mixed, algorithm="maxscore", k=10, ranges=True)
+    )
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],
         exp[["query_id", "rank", "doc_id"]],
@@ -1485,7 +1496,9 @@ def test_range_executor_heterogeneous_k_matches_query_major(index, parsed):
 
     no_k = parsed.drop("k")
     exp = _fetch(topk_search(index, no_k, algorithm="maxscore", k=7))
-    got = _fetch(topk_range(index, no_k, algorithm="maxscore", k=7))
+    got = _fetch(
+        topk_search(index, no_k, algorithm="maxscore", k=7, ranges=True)
+    )
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],
         exp[["query_id", "rank", "doc_id"]],
@@ -1494,16 +1507,17 @@ def test_range_executor_heterogeneous_k_matches_query_major(index, parsed):
 
 @pytest.mark.parametrize("batches", [1, 3, 16])
 def test_range_batch_matches_oracle(index, parsed, oracle_topk, batches):
-    """Batch-major range execution (topk_range_batch): payloads ship
-    once per (batch, bucket) instead of once per (query, bucket) but
-    results stay rank-identical to the exhaustive oracle at every
-    batch count (1 = full sharing, 16 > query count = query-major
-    degenerate)."""
-    from pisa_spark.query.executor import topk_range_batch
+    """Batch-major range execution (topk_search_batch, ranges=True):
+    payloads ship once per (batch, bucket) instead of once per
+    (query, bucket) but results stay rank-identical to the exhaustive
+    oracle at every batch count (1 = full sharing, 16 > query count =
+    query-major degenerate)."""
+    from pisa_spark.query.executor import topk_search_batch
 
     got = _fetch(
-        topk_range_batch(
-            index, parsed, algorithm="maxscore", k=10, batches=batches
+        topk_search_batch(
+            index, parsed, algorithm="maxscore", k=10, batches=batches,
+            ranges=True,
         )
     )
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
@@ -1514,10 +1528,10 @@ def test_range_batch_matches_oracle(index, parsed, oracle_topk, batches):
 
 
 def test_range_batch_live_thresholds(index, parsed, oracle_topk):
-    """topk_range_batch with bootstrap thresholds: the Catalyst
+    """Ranged topk_search_batch with bootstrap thresholds: the Catalyst
     live-range pre-filter path stays rank-identical, and conjunctive
     bootstrapping is rejected exactly like the query-major form."""
-    from pisa_spark.query.executor import topk_range_batch
+    from pisa_spark.query.executor import topk_search_batch
     from pisa_spark.query.thresholds import (
         estimate_thresholds_with_pairs, kth_score_cache,
     )
@@ -1525,9 +1539,9 @@ def test_range_batch_live_thresholds(index, parsed, oracle_topk):
     cache = kth_score_cache(index, k=10)
     est = estimate_thresholds_with_pairs(index, parsed, cache, k=10)
     got = _fetch(
-        topk_range_batch(
+        topk_search_batch(
             index, parsed, algorithm="block_max_wand", k=10,
-            thresholds=est, batches=3,
+            thresholds=est, batches=3, ranges=True,
         )
     )
     exp = oracle_topk.astype({"rank": "int64", "doc_id": "int64"})
@@ -1536,8 +1550,9 @@ def test_range_batch_live_thresholds(index, parsed, oracle_topk):
     )
 
     with pytest.raises(ValueError, match="unsound"):
-        topk_range_batch(
-            index, parsed, algorithm="ranked_and", k=10, thresholds=est
+        topk_search_batch(
+            index, parsed, algorithm="ranked_and", k=10, thresholds=est,
+            ranges=True,
         )
 
 
@@ -1549,11 +1564,13 @@ def test_range_batch_heterogeneous_k(index, parsed):
         F.when(F.pmod(F.xxhash64("query_id"), F.lit(2)) == 0, F.lit(4))
         .otherwise(F.lit(9)),
     )
-    from pisa_spark.query.executor import topk_range_batch
+    from pisa_spark.query.executor import topk_search_batch
 
     exp = _fetch(topk_search(index, mixed, algorithm="maxscore", k=10))
     got = _fetch(
-        topk_range_batch(index, mixed, algorithm="maxscore", k=10, batches=2)
+        topk_search_batch(
+            index, mixed, algorithm="maxscore", k=10, batches=2, ranges=True
+        )
     )
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],
@@ -1563,7 +1580,9 @@ def test_range_batch_heterogeneous_k(index, parsed):
     no_k = parsed.drop("k")
     exp = _fetch(topk_search(index, no_k, algorithm="maxscore", k=7))
     got = _fetch(
-        topk_range_batch(index, no_k, algorithm="maxscore", k=7, batches=2)
+        topk_search_batch(
+            index, no_k, algorithm="maxscore", k=7, batches=2, ranges=True
+        )
     )
     pd.testing.assert_frame_equal(
         got[["query_id", "rank", "doc_id"]],

@@ -89,6 +89,39 @@ def _subtree_lines(plan: str, marker: str):
         yield "\n".join(sub)
 
 
+def _operators(df) -> list[str]:
+    """One-line descriptions of the operators in ``df``'s own physical
+    plan tree: AQE wrappers are unwrapped, and cached relations
+    (InMemoryTableScan) are leaves, so the index build plans behind
+    them stay out."""
+    out, stack = [], [df._jdf.queryExecution().executedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "AdaptiveSparkPlan":
+            node = node.executedPlan()
+        out.append(node.simpleString(100))
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return out
+
+
+def _topk_settings(index, parsed):
+    """The four top-k execution settings: query or batch grouping x
+    whole-list or ranges."""
+    from pisa_spark.query.executor import topk_search, topk_search_batch
+
+    return {
+        "query": topk_search(index, parsed, algorithm="block_max_wand"),
+        "batch": topk_search_batch(index, parsed, algorithm="block_max_wand"),
+        "query_ranges": topk_search(
+            index, parsed, algorithm="maxscore", ranges=True
+        ),
+        "batch_ranges": topk_search_batch(
+            index, parsed, algorithm="maxscore", ranges=True
+        ),
+    }
+
+
 def test_kernel_path_has_no_sort_merge_join(index, parsed):
     from pisa_spark.query.executor import topk_search
 
@@ -100,18 +133,45 @@ def test_kernel_path_has_no_sort_merge_join(index, parsed):
 def test_segments_never_broadcast(index, parsed):
     """No BroadcastExchange subtree may contain the segments payload
     columns (doc_bytes is segments-only) — the broadcast sides must be
-    the query-sized parsed/term_meta tables."""
-    from pisa_spark.query.executor import topk_range, topk_search
-
-    for df in (
-        topk_search(index, parsed, algorithm="block_max_wand"),
-        topk_range(index, parsed, algorithm="maxscore"),
-    ):
+    the query-sized parsed/term_meta tables — in every execution
+    setting."""
+    for name, df in _topk_settings(index, parsed).items():
         plan = _plan_str(df)
         subtrees = list(_subtree_lines(plan, "BroadcastExchange"))
-        assert subtrees, plan  # the hinted joins must exist
+        assert subtrees, (name, plan)  # the hinted joins must exist
         for sub in subtrees:
-            assert "doc_bytes" not in sub, sub
+            assert "doc_bytes" not in sub, (name, sub)
+
+
+def test_topk_settings_plan_shapes(spark, index, parsed):
+    """Plan shape of each top-k setting. Batch grouping: both cogroup
+    sides pinned by exactly two hashpartitioning(batch_id, <batches>)
+    exchanges feeding one FlatMapCoGroupsInPandas. Query grouping: one
+    FlatMapGroupsInPandas. Whole-list execution plans no Window;
+    either ranges form plans exactly one, the partial top-k merge.
+    The workload is checkpointed so that its own parse plan (the
+    lexicon's id-assignment windows) stays out of the count."""
+    import re
+
+    settings = _topk_settings(index, parsed.localCheckpoint())
+    ops = {name: _operators(df) for name, df in settings.items()}
+    batches = 2 * spark.sparkContext.defaultParallelism
+
+    def count(name, pattern):
+        return sum(bool(re.match(pattern, op)) for op in ops[name])
+
+    exchange = rf"Exchange hashpartitioning\(batch_id#\d+, {batches}\)"
+    assert count("batch", exchange) == 2, ops["batch"]
+    for name in ("batch", "batch_ranges"):
+        assert count(name, "FlatMapCoGroupsInPandas") == 1, ops[name]
+        assert count(name, "FlatMapGroupsInPandas") == 0, ops[name]
+    for name in ("query", "query_ranges"):
+        assert count(name, "FlatMapGroupsInPandas") == 1, ops[name]
+        assert count(name, "FlatMapCoGroupsInPandas") == 0, ops[name]
+    for name in ("query", "batch"):
+        assert count(name, r"Window\b") == 0, ops[name]
+    for name in ("query_ranges", "batch_ranges"):
+        assert count(name, r"Window\b") == 1, ops[name]
 
 
 def test_threshold_zero_disables_lexicon_broadcast(spark):
@@ -214,12 +274,14 @@ def test_live_range_join_is_unhinted(index, parsed, spark):
     strategy. Pin: no BroadcastExchange subtree under that join's
     aggregate contains doc_bytes (covered above) and the plan builds
     without a hard hint from our side."""
-    from pisa_spark.query.executor import topk_range
+    from pisa_spark.query.executor import topk_search
 
     thr = parsed.select("query_id").distinct().withColumn(
         "threshold_micro", F.lit(0).cast("long")
     )
-    df = topk_range(index, parsed, algorithm="maxscore", thresholds=thr)
+    df = topk_search(
+        index, parsed, algorithm="maxscore", thresholds=thr, ranges=True
+    )
     analyzed = df._jdf.queryExecution().analyzed().toString()
     # exactly the broadcasts we hint (parsed/qt/thresholds) — counted
     # conservatively: every ResolvedHint line must reference a

@@ -95,7 +95,7 @@ def test_kept_block_bounds_stay_sound(spark, tmp_path):
     """After a generation that does NOT touch a term, its kept blocks'
     stored max_score TIMES the query-side term_meta.bound_factor must
     still upper-bound the true (fresh-stats) block max score — the
-    executor applies exactly this product (_query_segments)."""
+    executor applies exactly this product (_factored_segment_rows)."""
     from pisa_spark.build import decode_segments
     from pisa_spark.functions.scoring import bm25_score_np
     from pisa_spark.streaming import IncrementalIndexer
@@ -789,13 +789,13 @@ def test_twenty_generation_soak_with_midstream_compact(spark, tmp_path):
 
 
 def test_range_batch_on_incremental_index(spark, tmp_path):
-    """topk_range_batch over a two-generation incremental index (with
-    real bound_factor inflation in term_meta): the batch-major range
-    form must agree rank-identically with query-major topk_search on
-    the same index — the bound-factor contract goes through the shared
-    _factored_segment_rows, so this pins that the newest executor path
-    honors it too."""
-    from pisa_spark.query.executor import topk_range_batch, topk_search
+    """Ranged topk_search_batch over a two-generation incremental
+    index (with real bound_factor inflation in term_meta): the
+    batch-major range form must agree rank-identically with
+    query-major topk_search on the same index — the bound-factor
+    contract goes through the shared _factored_segment_rows, so this
+    pins that the batch-major range path honors it too."""
+    from pisa_spark.query.executor import topk_search, topk_search_batch
     from pisa_spark.query.parser import parse_queries
     from pisa_spark.streaming import IncrementalIndexer
 
@@ -823,7 +823,9 @@ def test_range_batch_on_incremental_index(spark, tmp_path):
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     got = (
-        topk_range_batch(idx, parsed, algorithm="maxscore", k=10, batches=3)
+        topk_search_batch(
+            idx, parsed, algorithm="maxscore", k=10, batches=3, ranges=True
+        )
         .toPandas().sort_values(["query_id", "rank"]).reset_index(drop=True)
     )
     pd.testing.assert_frame_equal(
