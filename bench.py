@@ -24,6 +24,7 @@ ride in the output JSON.
 Env:
   SPARK_GRAFT_SF_DIR      input dir (default /root/testdata/sf0.1)
   SPARK_GRAFT_CPUS        local[N] cores (default 32)
+  SPARK_GRAFT_DRIVER_MEM  spark.driver.memory (default 8g, session.get_spark)
   SPARK_GRAFT_REPEATS     timed runs per query job, best-of (default 5)
   SPARK_GRAFT_BUILD_REPEATS  full index builds, best-of (default 3)
   SPARK_GRAFT_SYNTH_DOCS  ALSO build a deterministic synthetic corpus
@@ -38,6 +39,10 @@ Env:
                           Set 0 to skip. The synth build runs once in
                           the already-warm session (BENCH.md separates
                           cold vs warm-session build numbers).
+
+This is the legacy per-round record (BENCH.md, BENCH_r*.json), not an
+A/B tool: same-window comparisons go through perfbench/ (its
+BENCHMARK.json workloads).
 
 Output: {"metric": "e2e_sec", "value": <total query sec>, "unit":
 "sec", "queries": {...}, "kernel_latency_us": {...}, "sf": ...,
@@ -179,23 +184,11 @@ def main() -> None:
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else -1.0
 
-    from pyspark.sql import SparkSession
+    from pisa_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("pisa-spark-bench")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # 2 task waves per scan on small inputs (straggler smoothing;
-        # see pisa_spark.session) — maxPartitionBytes governs at scale.
-        .config("spark.sql.files.minPartitionNum", str(2 * cpus))
-        # shuffle codec: lz4 default — zstd taxed every small query
-        # job ~25% for a flat sf-build (pisa_spark.session comment)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    # the shipped session config (pisa_spark.session), so the record
+    # measures what ships
+    spark = get_spark(app_name="pisa-spark-bench", cores=cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     from pisa_spark.config import AnalyzerConfig, EngineConfig, IndexConfig

@@ -101,7 +101,6 @@ def native_terms_col(cfg: AnalyzerConfig):
 def tokenize_pages(
     pages: DataFrame,
     cfg: AnalyzerConfig | None = None,
-    lang_filter: str | None = None,
     assign_doc_ids: bool = True,
     stats_out: dict | None = None,
     id_broadcast_rows: int | None = None,
@@ -120,8 +119,6 @@ def tokenize_pages(
     assign_doc_ids=False paths (the caller must aggregate itself).
     """
     cfg = cfg or AnalyzerConfig()
-    if lang_filter:
-        pages = pages.filter(F.col("lang") == lang_filter)
     # url (and lang) pass through text extraction unchanged, so the
     # docID side below projects from the PRE-extract frame — a pruned
     # scan that never runs the html kernel.
@@ -219,8 +216,9 @@ def _with_assigned_ids(
     would multiply through this join, where the old in-place
     numbering silently gave duplicates arbitrary distinct ids.
     Callers that can count the joined result cheaply should compare
-    it against ``stats_out['n_rows']`` (build_index and BuildPipeline
-    both do) — any fan-out is a duplicate-url input error."""
+    it against ``stats_out['n_rows']`` (the build graph,
+    index._build_graph, does) — any fan-out is a duplicate-url input
+    error."""
     from pisa_spark.build.invert import maybe_broadcast
 
     cnt: dict = {}

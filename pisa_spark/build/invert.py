@@ -34,7 +34,7 @@ def build_lexicon(docs: DataFrame) -> DataFrame:
     distinct docs containing the term.
 
     Standalone convenience (one corpus-pair shuffle of its own). The
-    full build (build_index / BuildPipeline) does NOT call this: it
+    build graph (index._build_graph) does NOT call this: it
     goes ids-first — ``build_term_ids`` (distinct terms only, a tiny
     shuffle thanks to map-side partial dedup) -> ``build_postings``
     (the single corpus-pair shuffle) -> ``lexicon_with_df`` (df

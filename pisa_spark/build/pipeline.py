@@ -1,12 +1,15 @@
-"""Checkpointed, resumable index-build pipeline with lineage + metrics.
+"""Checkpointed, resumable store step for the one index-build graph.
 
 North-rule requirement: the build must be "resumable from
 per-partition checkpoints with lineage and row/byte metrics recorded
 per partition". The reference's analogue is its batch-spill files
 (`.batch.N.{docs,freqs,sizes}`, src/invert.cpp:139-165) which let a
-crashed invert restart from finished batches; here each STAGE is a
-parquet checkpoint directory and each written part-file is the
-per-partition unit:
+crashed invert restart from finished batches — a storage choice
+inside the one build lifecycle, not a second pipeline. Likewise
+``BuildPipeline.run`` runs the same graph as ``index.build_index``
+(``index._build_graph``) and differs only in its store step
+``_stage``: each STAGE is a parquet checkpoint directory and each
+written part-file is the per-partition unit:
 
     out_dir/<stage>/part-*.parquet      stage output, partitioned
     out_dir/<stage>/_MANIFEST.json      lineage + per-partition metrics
@@ -19,21 +22,19 @@ part-file rows/bytes (read from parquet footers — no extra scan).
 last finished stage, and a config change invalidates exactly the
 stages downstream of it.
 
-Stage DAG (each arrow is a shuffle boundary, SURVEY §3.1):
-
-    pages -> docs -> term_ids -> postings -> lexicon -> segments
-                  \\-> stats                     \\-> term_meta
-
-(doc_sizes / docmap are column-pruned projections of the docs
-checkpoint, not separate stages)
+Stages (the graph in ``pisa_spark.index``): docs, term_ids, stats,
+postings, lexicon, term_meta (plus term_meta_raw when quantized),
+segments. doc_sizes / docmap are column-pruned projections of the
+docs checkpoint, not separate stages.
 """
 
 from __future__ import annotations
 
 import hashlib
 import json
+import shutil
 import time
-from dataclasses import asdict
+from dataclasses import asdict, replace
 from pathlib import Path
 from typing import Callable
 
@@ -41,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from pisa_spark.codecs import WIRE_VERSION
 from pisa_spark.config import EngineConfig
+from pisa_spark.index import DuplicateUrlError, _build_graph
 
 MANIFEST = "_MANIFEST.json"
 
@@ -59,15 +61,11 @@ def _fingerprint(payload: dict) -> str:
 
 
 def _partition_metrics(stage_dir: Path) -> list[dict]:
-    """Per part-file (rows, bytes) from parquet footers only.
-
-    Recursive: a stage written with partition_by nests its part-files
-    under key=value directories, so a top-level glob would record 0
-    rows/bytes for it."""
+    """Per part-file (rows, bytes) from parquet footers only."""
     import pyarrow.parquet as pq
 
     out = []
-    for f in sorted(stage_dir.rglob("*.parquet")):
+    for f in sorted(stage_dir.glob("*.parquet")):
         out.append(
             {
                 "file": str(f.relative_to(stage_dir)),
@@ -123,8 +121,7 @@ class BuildPipeline:
         return None
 
     def _stage(self, stage: str, parents: list[str],
-               compute: Callable[[], DataFrame],
-               partition_by: list[str] | None = None) -> DataFrame:
+               compute: Callable[[], DataFrame]) -> DataFrame:
         """Run-or-resume one stage; returns the checkpointed DataFrame."""
         parent_fps = {
             p: (self._load_manifest(p) or {}).get("fingerprint", "?")
@@ -139,12 +136,16 @@ class BuildPipeline:
 
         t0 = time.perf_counter()
         df = compute()
-        writer = df.write.mode("overwrite").option(
+        if stage == "segments":
+            # Cluster the stored table by term_id so parquet row-group
+            # min/max + dictionary stats are tight: the executor's
+            # workload IN(term_id) pushdown (_pruned_segments) then
+            # skips whole row groups instead of reading the corpus per
+            # query batch. Per-partition sort only — no extra shuffle.
+            df = df.sortWithinPartitions("term_id", "block_id")
+        df.write.mode("overwrite").option(
             "compression", CHECKPOINT_CODEC
-        )
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(stage_dir))
+        ).parquet(str(stage_dir))
         wall = time.perf_counter() - t0
         parts = _partition_metrics(stage_dir)
         manifest = {
@@ -169,169 +170,18 @@ class BuildPipeline:
         """Build (or resume) the full index; returns InvertedIndex
         backed by the checkpoint parquet (every artifact re-readable
         without recompute)."""
-        from pisa_spark.build import (
-            build_doc_sizes, build_postings, build_term_ids,
-            lexicon_with_df,
-            build_segments, build_term_meta, collection_stats, tokenize_pages,
-        )
-        from pisa_spark.build.segments import scored_postings
-        from pisa_spark.index import InvertedIndex
-
-        # ONE corpus-sized checkpoint: docIDs are a function of url
-        # alone, so they are assigned over the column-pruned url
-        # projection of the INPUT (tiny: one row per doc, no terms
-        # arrays) and joined back into the tokenize scan — the join is
-        # broadcast when the counted doc count is known small, else a
-        # plain join for AQE. The previous shape (tokenize checkpoint,
-        # then range-shuffle + localCheckpoint + window over the full
-        # terms arrays just to number rows) wrote the corpus to disk
-        # twice and moved it through a shuffle once more; at 100 TB
-        # that is corpus-scale I/O spent on an id column.
-        from pisa_spark.build.forward import ID_BROADCAST_ROWS
-
-        cnt: dict = {}
-        docs = self._stage(
-            "docs", [],
-            lambda: tokenize_pages(
-                pages, self.config.analyzer, stats_out=cnt,
-                id_broadcast_rows=min(
-                    self.config.index.lexicon_broadcast_threshold,
-                    ID_BROADCAST_ROWS,
-                ),
-            ),
-        )
-        # Duplicate-url guard (free: the docs manifest already counts
-        # rows): the id join fans out on duplicate urls — a corrupted
-        # index (doubled tf, inflated stats) must fail the build, not
-        # ship. The corrupt checkpoint is DELETED before raising:
-        # otherwise a rerun would resume it with ``cnt`` empty and the
-        # guard skipped, shipping exactly the corruption this blocks.
-        # (NULL urls are caught earlier, inside the id assignment's
-        # offset collect — forward._with_assigned_ids forbid_null.)
-        if cnt:
-            docs_rows = (self._load_manifest("docs") or {}).get("n_rows")
-            if docs_rows is not None and docs_rows != cnt["n_rows"]:
-                import shutil
-
-                shutil.rmtree(self.out / "docs", ignore_errors=True)
-                raise ValueError(
-                    f"duplicate urls in input: {cnt['n_rows']} distinct-"
-                    f"numbered urls joined into {docs_rows} doc rows "
-                    "(url is the corpus key and must be unique); the "
-                    "docs checkpoint was removed"
-                )
-        # Ids-first invert (invert.build_lexicon docstring): the
-        # term_ids stage shuffles only distinct terms (map-side partial
-        # dedup -> per-task local vocabularies), build_postings is the
-        # single corpus-pair shuffle, and the lexicon's df is a
-        # vocabulary-sized aggregate off the postings checkpoint — the
-        # old lexicon stage's second corpus-wide distinct(term, doc)
-        # pass is gone, and the extra checkpoint (term_ids) is
-        # vocabulary-sized, not corpus-sized.
-        term_ids = self._stage(
-            "term_ids", ["docs"], lambda: build_term_ids(docs)
-        )
-        # doc_sizes / docmap are pure projections of the docs
-        # checkpoint: parquet column pruning makes reading them off
-        # docs exactly as cheap as a dedicated copy, without the extra
-        # stage write (two fewer corpus-keyed write jobs per build).
-        doc_sizes = build_doc_sizes(docs)
-        stats_df = self._stage(
-            "stats", ["docs"], lambda: collection_stats(doc_sizes)
-        )
-        stats = stats_df.collect()[0]
-        num_docs = int(stats["num_docs"])
-        avg_len = float(stats["avg_len"] or 0.0)
-        collection_len = int(stats["collection_len"] or 0)
-
-        # Vocabulary size comes free from the term_ids stage manifest;
-        # it gates the broadcast hints (invert.maybe_broadcast).
-        lexicon_size = (self._load_manifest("term_ids") or {}).get("n_rows")
-        bcast = self.config.index.lexicon_broadcast_threshold
-        # carry_doc_len: the postings checkpoint stores doc_len too
-        # (~1 varint-packed column), so the segment encode never
-        # re-shuffles the pairs on doc_id for the doc_sizes join.
-        postings = self._stage(
-            "postings", ["docs", "term_ids"],
-            lambda: build_postings(
-                docs, term_ids,
-                lexicon_size=lexicon_size, broadcast_threshold=bcast,
-                carry_doc_len=True,
-            ),
-        )
-        lexicon = self._stage(
-            "lexicon", ["term_ids", "postings"],
-            lambda: lexicon_with_df(term_ids, postings),
-        )
-        scored = scored_postings(
-            postings, doc_sizes, lexicon, num_docs, avg_len,
-            lexicon_size=lexicon_size, broadcast_threshold=bcast,
-        )
-        # Quantized configs need the index-wide max term weight BEFORE
-        # segment encoding, and the final term_meta carries quantized
-        # bounds — same routing as build_index (via quantized_rescale),
-        # with the raw metadata checkpointed so resume works.
-        index_max_score = None
-        seg_parents = ["postings", "lexicon", "stats"]
-        if self.config.index.quantize_bits:
-            from pisa_spark.index import quantized_rescale
-
-            term_meta_raw = self._stage(
-                "term_meta_raw", ["postings", "lexicon", "stats"],
-                lambda: build_term_meta(
-                    scored, num_docs, avg_len, self.config.bm25
-                ),
-            )
-            index_max_score, rescaled = quantized_rescale(
-                term_meta_raw, self.config.index.quantize_bits
-            )
-            term_meta = self._stage(
-                "term_meta", ["term_meta_raw"], lambda: rescaled
-            )
-            seg_parents = seg_parents + ["term_meta_raw"]
-        else:
-            term_meta = self._stage(
-                "term_meta", ["postings", "lexicon", "stats"],
-                lambda: build_term_meta(
-                    scored, num_docs, avg_len, self.config.bm25
-                ),
-            )
-        def _compute_segments():
-            seg = build_segments(
-                scored, num_docs, avg_len, self.config.index, self.config.bm25,
-                index_max_score=index_max_score,
-            )
-            if self.config.index.compress_blockmax:
-                from pisa_spark.build.segments import compress_block_maxes
-
-                seg = compress_block_maxes(seg, term_meta)
-            # Cluster the stored table by term_id so parquet row-group
-            # min/max + dictionary stats are tight: the executor's
-            # workload IN(term_id) pushdown (_pruned_segments) then
-            # skips whole row groups instead of reading the corpus per
-            # query batch. Per-partition sort only — no extra shuffle.
-            return seg.sortWithinPartitions("term_id", "block_id")
-
-        if self.config.index.compress_blockmax:
-            seg_parents = seg_parents + ["term_meta"]
-        segments = self._stage("segments", seg_parents, _compute_segments)
-        docmap = docs.select("doc_id", "url")
-        return InvertedIndex(
-            lexicon=lexicon,
-            docmap=docmap,
-            doc_sizes=doc_sizes,
-            # Public contract: (term_id, doc_id, tf); doc_len in the
-            # checkpoint is a build-internal column (see build_postings).
-            postings=postings.select("term_id", "doc_id", "tf"),
-            segments=segments,
-            term_meta=term_meta,
-            num_docs=num_docs,
-            avg_len=avg_len,
-            collection_len=collection_len,
-            config=self.config,
-            segments_file_backed=True,
-            num_terms=int(lexicon_size) if lexicon_size is not None else None,
-        )
+        try:
+            index = _build_graph(pages, self.config, self._stage)
+        except DuplicateUrlError as err:
+            # The corrupt checkpoints are DELETED before re-raising:
+            # otherwise a rerun would resume the docs stage with the
+            # url count unknown and the guard skipped, shipping
+            # exactly the corruption it blocks.
+            for stage in self.executed:
+                shutil.rmtree(self.out / stage, ignore_errors=True)
+            err.add_note(f"removed checkpoints: {self.executed}")
+            raise
+        return replace(index, segments_file_backed=True)
 
     # ------------------------------------------------------------- report
 

@@ -25,7 +25,9 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``cores=None`` -> ``local[*]``. ``shuffle_partitions`` defaults to
+    ``cores=None`` -> ``local[$SPARK_GRAFT_CPUS]`` when set, else
+    ``local[*]``; ``$SPARK_GRAFT_DRIVER_MEM`` sets the driver memory
+    (default 8g). ``shuffle_partitions`` defaults to
     the core count (small-scale local runs); cluster deployments should
     override via ``extra_conf`` or spark-submit ``--conf``.
     """
@@ -66,7 +68,7 @@ def get_spark(
         # with their own --conf anyway.
         # Posting-list arrays can be large; keep Arrow batches bounded.
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("PISA_SPARK_DRIVER_MEM", "8g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -88,14 +88,12 @@ from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from pisa_spark.build import (
-    build_doc_sizes, build_segments, build_term_meta, tokenize_pages,
-)
+from pisa_spark.build import build_doc_sizes, tokenize_pages
 from pisa_spark.build.ids import assign_global_ids
 from pisa_spark.codecs import WIRE_VERSION
 from pisa_spark.build.segments import scored_postings
 from pisa_spark.config import EngineConfig
-from pisa_spark.index import InvertedIndex
+from pisa_spark.index import InvertedIndex, encode_scored
 
 _STATS_RE = re.compile(r"stats_g(\d+)")
 log = logging.getLogger(__name__)
@@ -651,21 +649,15 @@ class IncrementalIndexer:
         # term_meta: affected terms exactly from `scored` (already
         # needed for the re-encode); untouched terms keep their stored
         # values and accumulate the sound query-side bound inflation.
-        affected_meta = build_term_meta(
-            scored, n_new, avg_new, self.config.bm25
-        ).withColumn("bound_factor", F.lit(1.0))
-
-        gen_segments = build_segments(
-            scored, n_new, avg_new, self.config.index, self.config.bm25
+        # Compressed u8 block maxima are relative to the FRESH
+        # affected-term max — the same max affected_meta stores, so
+        # query-side recovery (q/255 * term_max * bound_factor) is
+        # exact-generation sound; factor starts at 1 and inflates both
+        # together.
+        affected_meta, gen_segments = encode_scored(
+            scored, n_new, avg_new, self.config
         )
-        if self.config.index.compress_blockmax:
-            # u8 maxima relative to the FRESH affected-term max — the
-            # same max affected_meta stores, so query-side recovery
-            # (q/255 * term_max * bound_factor) is exact-generation
-            # sound; factor starts at 1 and inflates both together.
-            from pisa_spark.build.segments import compress_block_maxes
-
-            gen_segments = compress_block_maxes(gen_segments, affected_meta)
+        affected_meta = affected_meta.withColumn("bound_factor", F.lit(1.0))
         # term_id-clustered files -> tight row-group stats for the
         # executor's workload IN(term_id) scan pruning (_pruned_segments)
         gen_segments.withColumn("segment_gen", F.lit(gen)).sortWithinPartitions(
@@ -736,14 +728,7 @@ class IncrementalIndexer:
             self._read("doc_sizes").drop("generation"),
             self._read(f"lexicon_g{prev}"), n, avg,
         ).localCheckpoint(eager=True)
-        term_meta = build_term_meta(scored, n, avg, self.config.bm25)
-        fresh = build_segments(
-            scored, n, avg, self.config.index, self.config.bm25
-        )
-        if self.config.index.compress_blockmax:
-            from pisa_spark.build.segments import compress_block_maxes
-
-            fresh = compress_block_maxes(fresh, term_meta)
+        term_meta, fresh = encode_scored(scored, n, avg, self.config)
         fresh.withColumn("segment_gen", F.lit(gen)).sortWithinPartitions(
             "term_id", "block_id"
         ).write.mode("append").partitionBy("segment_gen").parquet(

@@ -26,15 +26,9 @@ def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     n_queries = int(sys.argv[2]) if len(sys.argv) > 2 else 400
 
-    from pyspark.sql import SparkSession
+    from pisa_spark.session import get_spark
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("calibrate-adaptive")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
+    spark = get_spark(app_name="calibrate-adaptive", cores=8)
     spark.sparkContext.setLogLevel("ERROR")
 
     from pisa_spark.codecs import CODECS

@@ -479,8 +479,9 @@ def test_ciff_sharded_import_zero_posting_lists(spark, tmp_path):
 def test_duplicate_urls_fail_loudly(spark, tmp_path):
     """url is the corpus key: a duplicated url must fail the build
     (the id join would otherwise fan out into a silently doubled
-    index — doubled tf, inflated stats). Both build paths guard it
-    with the free row-count comparison."""
+    index — doubled tf, inflated stats). Both entry points run the
+    one guard (the free row-count comparison), on both encode routes
+    (f32 and impact-quantized)."""
     from pisa_spark.corpus import synth_pages
     from pisa_spark.index import build_index
 
@@ -488,16 +489,60 @@ def test_duplicate_urls_fail_loudly(spark, tmp_path):
     dup = pages.limit(1)
     bad = pages.union(dup)
 
-    with pytest.raises(ValueError, match="duplicate urls"):
-        build_index(spark, bad, CFG)
+    for name, cfg in (("f32", CFG), ("q8", _with_index(quantize_bits=8))):
+        with pytest.raises(ValueError, match="duplicate urls"):
+            build_index(spark, bad, cfg)
 
-    with pytest.raises(ValueError, match="duplicate urls"):
-        BuildPipeline(spark, str(tmp_path / "dup_idx"), CFG).run(bad)
+        out = str(tmp_path / f"dup_idx_{name}")
+        with pytest.raises(ValueError, match="duplicate urls"):
+            BuildPipeline(spark, out, cfg).run(bad)
 
-    # the corrupt docs checkpoint must NOT survive the failure: a
-    # rerun on the same dir re-raises instead of resuming it
-    with pytest.raises(ValueError, match="duplicate urls"):
-        BuildPipeline(spark, str(tmp_path / "dup_idx"), CFG).run(bad)
+        # the corrupt docs checkpoint must NOT survive the failure: a
+        # rerun on the same dir re-raises instead of resuming it
+        with pytest.raises(ValueError, match="duplicate urls"):
+            BuildPipeline(spark, out, cfg).run(bad)
+
+
+def _with_index(**kw) -> EngineConfig:
+    from dataclasses import replace
+
+    return replace(CFG, index=replace(CFG.index, **kw))
+
+
+def _content_hash(df) -> tuple[int, int]:
+    """(rows, order-free sum of per-row hashes over sorted columns)."""
+    from pyspark.sql import functions as F
+
+    row = df.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.hash(*sorted(df.columns)).cast("long")).alias("h"),
+    ).collect()[0]
+    return int(row["n"]), int(row["h"] or 0)
+
+
+@pytest.mark.parametrize("index_kw", [
+    {}, {"quantize_bits": 8}, {"compress_blockmax": True},
+], ids=["default", "quantize_bits=8", "compress_blockmax"])
+def test_build_index_and_pipeline_build_the_same_index(
+        spark, tmp_path, index_kw):
+    """build_index (in memory) and BuildPipeline.run (parquet
+    checkpoints) run one build graph under two store steps, so every
+    artifact and every collection stat must agree."""
+    from pisa_spark.corpus import synth_pages
+    from pisa_spark.index import build_index
+
+    cfg = _with_index(**index_kw)
+    pages = synth_pages(spark, 120)  # no doc_id column -> assign path
+    mem = build_index(spark, pages, cfg)
+    staged = BuildPipeline(spark, str(tmp_path / "index"), cfg).run(pages)
+    for name in ("segments", "term_meta", "lexicon", "doc_sizes",
+                 "docmap", "postings"):
+        assert _content_hash(getattr(mem, name)) == _content_hash(
+            getattr(staged, name)), name
+    stats = ("num_docs", "avg_len", "collection_len", "num_terms")
+    assert [getattr(mem, a) for a in stats] == [
+        getattr(staged, a) for a in stats]
+    assert not mem.segments_file_backed and staged.segments_file_backed
 
 
 def test_null_urls_fail_loudly(spark, tmp_path):
